@@ -9,7 +9,7 @@ Run it from the root of a checkout. The first run builds the library and
 the harness from source with sbt (offline); later runs reuse the build
 while the sources are unchanged. Build outputs, inputs, oracle results and
 run directories live under `.bench_build/`. The fixture comes from
-$PERFBENCH_FIXTURE (default /root/testdata/sf0.1).
+$PERFBENCH_FIXTURE (default ~/testdata/sf0.1, where the fixtures are installed).
 
 With --trace 0 the metrics are the end-to-end ones; with --trace 1 the
 listeners and the log appender are attached and the metrics are the
@@ -35,8 +35,8 @@ import replica  # noqa: E402
 
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
-FIXTURE = os.environ.get("PERFBENCH_FIXTURE", "/root/testdata/sf0.1")
-CPUS = str(os.cpu_count() or 4)
+FIXTURE = os.environ.get("PERFBENCH_FIXTURE", os.path.expanduser("~/testdata/sf0.1"))
+CPUS = str(len(os.sched_getaffinity(0)))  # what `nproc` reports
 
 # Each workload is a subset of its query family, sized so that one run
 # (set-up, cold pass, warm reps and the oracle compare) takes about a minute
@@ -258,7 +258,8 @@ def main(argv=None):
         shutil.rmtree(run_dir, ignore_errors=True)
 
     detail = dict(result["detail"], workload=args.workload, seed=args.seed,
-                  seconds=args.seconds, trace=args.trace, order=names, input=input_dir)
+                  seconds=args.seconds, trace=args.trace, order=names,
+                  input=os.path.basename(input_dir))
     os.makedirs(os.path.join(BUILD, "results"), exist_ok=True)
     with open(os.path.join(BUILD, "results",
                            f"{args.workload}-s{args.seed}-t{args.trace}.json"), "w") as fh:
