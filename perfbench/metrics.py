@@ -12,6 +12,12 @@ repeated executions into the noop sink).
 Per-layer metrics get the suffix `.cold` or `.warm`. A `.warm` value is per
 warm cycle: its sum over all warm samples times the number of queries over
 the number of warm samples, so it compares with `warm_wall_s`.
+
+`catalyst.*` times come from `QueryPlanningTracker` phases: those of each
+action's QueryExecution (from the listener) and the analysis of the built
+DataFrame, recorded in the sample as `built`. Intermediate frames analyzed
+while the query is built are not seen from outside; their analysis stays
+inside `registry.construct_s`.
 """
 import statistics
 
@@ -156,7 +162,8 @@ def per_layer(raw, cold, warm, fixture_bytes, cpus):
         scale = (len(cold) / len(group)) if (name == "warm" and group) else 1.0
         for key, (v, unit) in accumulate(group, by_tag, cpus).items():
             out[f"{key}.{name}"] = (v * scale if unit in ("s", "MB", "count") else v, unit)
-        sbytes, sfiles = store[f"{name}_bytes"], store[f"{name}_files"]
+        # the store grows over the whole pass, so it is scaled like the sums
+        sbytes, sfiles = store[f"{name}_bytes"] * scale, store[f"{name}_files"] * scale
         out[f"store.write_mb.{name}"] = (sbytes / MB, "MB")
         out[f"store.files.{name}"] = (sfiles, "count")
         out[f"store.bytes_per_input_byte.{name}"] = (sbytes / fixture_bytes, "ratio")
@@ -201,6 +208,11 @@ def accumulate(group, by_tag, cpus):
                            ("catalyst.optimize_s", "optimization"),
                            ("catalyst.plan_s", "planning")):
             acc[key] += sum((q[phase][1] - q[phase][0]) / 1e3 for q in qes if q[phase])
+        # the built frame's analysis, unless an action ran on that same
+        # QueryExecution and the listener already counted it
+        b = s["built"]
+        if b and b["analysis"] and b["id"] not in {q["id"] for q in qes}:
+            acc["catalyst.analysis_s"] += (b["analysis"][1] - b["analysis"][0]) / 1e3
         for d in spans.get("defects", []):
             acc["catalyst." + d["kind"]] += 1
         acc["codegen.compiles"] += s["compiles"]

@@ -30,6 +30,7 @@ SCALED = {
     "embeddings": ["vec_id"],
 }
 FIXED = ["region", "nation"]
+KEEP = 3  # replicas kept under the root, so disk use stays bounded
 
 
 def copy_plan(r, seed):
@@ -44,9 +45,9 @@ def copy_plan(r, seed):
     return offset, sorted(tags)
 
 
-def build(fixture, root, r, seed, keep=3):
+def build(fixture, root, r, seed):
     """Writes the replica under `root` (reused if already complete) and
-    returns its directory. Keeps the `keep` most recent replicas."""
+    returns its directory. Keeps the KEEP most recent replicas."""
     import duckdb
     name = f"x{r}-s{seed}"
     out = os.path.join(root, name)
@@ -85,6 +86,6 @@ def build(fixture, root, r, seed, keep=3):
     open(done, "w").close()
     others = sorted((d for d in os.listdir(root) if d != name),
                     key=lambda d: os.path.getmtime(os.path.join(root, d)))
-    for d in others[:max(0, len(others) - (keep - 1))]:
+    for d in others[:max(0, len(others) - (KEEP - 1))]:
         shutil.rmtree(os.path.join(root, d), ignore_errors=True)
     return out

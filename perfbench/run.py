@@ -163,6 +163,18 @@ def check_results(names, oracle_sql, input_dir, results_dir, tmp_dir):
     fp = input_fingerprint(input_dir)
     verdicts = {}
     for name in names:
+        out = os.path.join(results_dir, name)
+        if not os.path.isdir(out):
+            verdicts[name] = "no result written (the query threw)"
+            continue
+        # as in diff.py, a result or an oracle that cannot be read or
+        # compared is that query's failure, not the run's
+        try:
+            s_rows, s_cols, s_n = diff.table_key(con.sql(f"SELECT * FROM '{out}/*.parquet'"))
+        except Exception as e:
+            verdicts[name] = f"spark output unreadable/uncomparable: {e}"
+            continue
+        s_rows = [list(r) for r in s_rows]
         key = hashlib.sha256(f"{fp}\n{oracle_sql[name]}".encode()).hexdigest()[:24]
         cached = os.path.join(cache_dir, f"{name}-{key}.json")
         if os.path.exists(cached):
@@ -170,18 +182,16 @@ def check_results(names, oracle_sql, input_dir, results_dir, tmp_dir):
                 d_rows, d_cols, d_n = json.load(fh)
         else:
             t0 = time.time()
-            d_rows, d_cols, d_n = diff.table_key(con.sql(oracle_sql[name]))
+            try:
+                d_rows, d_cols, d_n = diff.table_key(con.sql(oracle_sql[name]))
+            except Exception as e:
+                verdicts[name] = f"oracle SQL error/uncomparable: {e}"
+                continue
             d_rows = [list(r) for r in d_rows]
             with open(cached + ".tmp", "w") as fh:
                 json.dump([d_rows, d_cols, d_n], fh)
             os.replace(cached + ".tmp", cached)
             log(f"oracle {name}: {time.time() - t0:.1f} s")
-        out = os.path.join(results_dir, name)
-        if not os.path.isdir(out):
-            verdicts[name] = "no result written (the query threw)"
-            continue
-        s_rows, s_cols, s_n = diff.table_key(con.sql(f"SELECT * FROM '{out}/*.parquet'"))
-        s_rows = [list(r) for r in s_rows]
         if name.startswith("q90_"):  # checked on rows only, by contract
             verdicts[name] = None if s_n == d_n else f"rows spark={s_n} duck={d_n}"
         elif s_cols != d_cols:

@@ -113,9 +113,9 @@ object Harness {
     }
 
     private def qe(qe: QueryExecution): Unit = {
-      val ph = qe.tracker.phases
-      def p(k: String) = ph.get(k).map(s => s"[${s.startTimeMs},${s.endTimeMs}]").getOrElse("null")
-      qes.add(s"""{"analysis":${p("analysis")},"optimization":${p("optimization")},"planning":${p("planning")}}""")
+      def p(k: String) = phase(qe, k)
+      qes.add(s"""{"id":${System.identityHashCode(qe)},"analysis":${p("analysis")},""" +
+        s""""optimization":${p("optimization")},"planning":${p("planning")}}""")
     }
     override def onSuccess(f: String, e: QueryExecution, d: Long): Unit = qe(e)
     override def onFailure(f: String, e: QueryExecution, x: Exception): Unit = qe(e)
@@ -154,6 +154,20 @@ object Harness {
     ctx.getConfiguration.getRootLogger
       .addAppender(log, org.apache.logging.log4j.Level.WARN, null)
     ctx.updateLoggers()
+  }
+
+  /** `[start,end]` epoch ms of one `QueryPlanningTracker` phase, or null. */
+  private def phase(qe: QueryExecution, name: String): String =
+    qe.tracker.phases.get(name).map(s => s"[${s.startTimeMs},${s.endTimeMs}]").getOrElse("null")
+
+  /** The built DataFrame's own QueryExecution, which Spark analyzes while
+    * the frame is built; no action's listener event covers it unless an
+    * action ran on that same QueryExecution. `{"id":..,"analysis":..}`. */
+  private def built(df: DataFrame): String = df match {
+    case d: org.apache.spark.sql.classic.Dataset[_] =>
+      val qe = d.queryExecution
+      s"""{"id":${System.identityHashCode(qe)},"analysis":${phase(qe, "analysis")}}"""
+    case _ => "null"
   }
 
   // ---- JVM counters -----------------------------------------------------
@@ -240,11 +254,13 @@ object Harness {
       val (g0, f0) = gcTotals()
       val t0 = nowMs
       var t1 = Double.NaN
+      var builtQe = "null"
       var err: String = null
       try {
         sc.setLocalProperty("perfbench.phase", "construct")
         val df = SparkEntry.queries(q)(spark, input)
         t1 = nowMs
+        builtQe = built(df)
         sc.setLocalProperty("perfbench.phase", "run")
         sink(df)
       } catch {
@@ -258,7 +274,7 @@ object Harness {
       currentTag = "idle"
       sc.setLocalProperty("perfbench.tag", null)
       samples += s"""{"q":${Json.str(q)},"rep":$rep,"pass":"$pass","start":$t0,""" +
-        s""""constructed":${if (t1.isNaN) "null" else t1.toString},"end":$t2,""" +
+        s""""constructed":${if (t1.isNaN) "null" else t1.toString},"end":$t2,"built":$builtQe,""" +
         s""""ok":${err == null},"error":${if (err == null) "null" else Json.str(err)},""" +
         s""""compiles":${c1 - c0},"compile_ns":${ct1 - ct0},"gc_ms":${g1 - g0},"full_gcs":${f1 - f0}}"""
     }

@@ -4,7 +4,9 @@ metric, the median, the quartiles and the spread (interquartile distance
 over the median), as `statistics.quantiles(values, n=4)` gives them.
 
     python3 perfbench/steady.py --workload <name> --seeds 1-10 --seconds 10 \
-        [--trace 0|1] [--out perfbench/baseline/<file>.json]
+        [--out perfbench/baseline/<file>.json]
+
+The runs are untraced (`--trace 0`), so the metrics are the end-to-end ones.
 """
 import argparse
 import json
@@ -34,7 +36,6 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="1-10")
     ap.add_argument("--seconds", default="10")
-    ap.add_argument("--trace", default="0")
     ap.add_argument("--out")
     args = ap.parse_args()
     runs = []
@@ -42,7 +43,7 @@ def main():
         t0 = time.time()
         p = subprocess.run([sys.executable, os.path.join(HERE, "run.py"),
                             "--workload", args.workload, "--seed", str(seed),
-                            "--seconds", args.seconds, "--trace", args.trace],
+                            "--seconds", args.seconds, "--trace", "0"],
                            stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
         if p.returncode != 0:
             sys.exit(f"seed {seed}: exit {p.returncode}")
@@ -56,7 +57,7 @@ def main():
     for k, v in table.items():
         print(f"{k:36s} median {v['median']:.5g}  q1 {v['q1']:.5g}  q3 {v['q3']:.5g}  "
               f"spread {v['spread']:.4f}")
-    record = {"workload": args.workload, "seconds": args.seconds, "trace": args.trace,
+    record = {"workload": args.workload, "seconds": args.seconds, "trace": "0",
               "seeds": seeds_of(args.seeds), "all_correct": all(r["correct"] for r in runs),
               "run_wall_s": spread([r["run_s"] for r in runs]), "metrics": table,
               "units": {k: runs[0]["metrics"][k]["unit"] for k in names}}

@@ -13,7 +13,7 @@ import metrics  # noqa: E402
 
 def sample(q, rep, pss, start, end, ok=True):
     return {"q": q, "rep": rep, "pass": pss, "start": start, "constructed": start,
-            "end": end, "ok": ok, "error": None if ok else "boom", "compiles": 0,
+            "end": end, "built": None, "ok": ok, "error": None if ok else "boom", "compiles": 0,
             "compile_ns": 0, "gc_ms": 0, "full_gcs": 0}
 
 
@@ -63,6 +63,42 @@ class FailedFracTest(unittest.TestCase):
         r = metrics.summarize(raw_record(samples), {"qa": None}, 1, traced=False)
         self.assertEqual((r["failed"], r["correct"]), (0, True))
         self.assertEqual(r["detail"]["reported"]["failed_frac"], 0.0)
+
+
+def traced_record(samples, store, qes=()):
+    return dict(raw_record(samples), sessions_start_s=1.0, tables_warm_s=2.0, cpus=4,
+                store=store, jobs=[], stages=[], defects=[], qes=list(qes))
+
+
+class PerLayerTest(unittest.TestCase):
+    def test_warm_store_writes_are_per_cycle(self):
+        samples = [sample("qa", 0, "cold", 0, 10), sample("qb", 0, "cold", 10, 20)]
+        samples += [sample(q, c, "warm", 20 + 10 * i, 30 + 10 * i)
+                    for i, (q, c) in enumerate([("qa", 1), ("qb", 1), ("qa", 2), ("qb", 2),
+                                                ("qa", 3), ("qb", 3)])]
+        store = {"cold_bytes": 3 * metrics.MB, "cold_files": 5,
+                 "warm_bytes": 6 * metrics.MB, "warm_files": 9}
+        m = metrics.summarize(traced_record(samples, store), {"qa": None, "qb": None},
+                              metrics.MB, traced=True)["metrics"]
+        self.assertAlmostEqual(m["store.write_mb.cold"]["value"], 3.0)
+        self.assertAlmostEqual(m["store.files.cold"]["value"], 5)
+        # three warm cycles: the totals over the pass are divided by three
+        self.assertAlmostEqual(m["store.write_mb.warm"]["value"], 2.0)
+        self.assertAlmostEqual(m["store.files.warm"]["value"], 3.0)
+        self.assertAlmostEqual(m["store.bytes_per_input_byte.warm"]["value"], 2.0)
+
+    def test_built_analysis_counts_once(self):
+        a = sample("qa", 0, "cold", 0, 1000)
+        a["built"] = {"id": 7, "analysis": [100, 300]}  # an action ran on it too
+        b = sample("qb", 0, "cold", 1000, 2000)
+        b["built"] = {"id": 8, "analysis": [1100, 1150]}  # no action ran on it
+        qes = [{"id": 7, "analysis": [100, 300], "optimization": [400, 500], "planning": None}]
+        store = {"cold_bytes": 0, "cold_files": 0, "warm_bytes": 0, "warm_files": 0}
+        m = metrics.summarize(traced_record([a, b], store, qes), {"qa": None, "qb": None},
+                              1, traced=True)["metrics"]
+        self.assertAlmostEqual(m["catalyst.analysis_s.cold"]["value"], 0.25)
+        self.assertAlmostEqual(m["catalyst.optimize_s.cold"]["value"], 0.1)
+        self.assertEqual(m["catalyst.executions.cold"]["value"], 1)
 
 
 class SelfTimeTest(unittest.TestCase):
