@@ -13,6 +13,10 @@ import org.apache.spark.sql.SparkSession
   * from single-shot timings were dominated by shared-JVM noise (the
   * round-3 "regressions" q41/q60/q62/q65 all evaporated on rerun); medians
   * across warmed in-process reps are stable to ~10%.
+  *
+  * Roster: every registered query in `SparkEntry.queries` order — the
+  * registry holds one engine per contract (plus the routers that pick
+  * between engines), so there is no second list of queries to skip.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -42,66 +46,9 @@ object Bench {
         s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: " +
           unknown.toSeq.sorted.mkString(", "))
     }
-    // Engine-parity variants DEMOTED from the default bench set
-    // (round-12 decision; SCALE.md "Round-12: bench demotion"). Each
-    // name stays in SparkEntry.queries — the driver's Verify gate
-    // still proves it against the family's shared oracle string every
-    // round — but where a family ships an AUTO-DISPATCHER that routes
-    // to one of the pinned engines (q233 over the spearman pair, q273
-    // over the quantile pair), benching the pinned variants re-times
-    // the identical computation the dispatcher already times: the
-    // bench was paying each family 2-3x for one engine's throughput.
-    // SPARK_GRAFT_BENCH_ONLY overrides (explicitly named ⇒ timed), so
-    // the dev loop and ScaleProbe comparisons still reach them.
-    val demoted = Set(
-      "q209_spearman", "q230_spearman_domain", // q233_spearman_auto
-      "q29_quantiles", "q262_quantiles_domain", // q273_quantiles_auto
-      // round-16 (verdict ask #5): engine-parity measurement forms
-      // superseded by store-served production twins under the SAME
-      // oracle strings — q304 serves q296's coverage-matched
-      // measurement from the physical stores; q305/q306 serve q292's
-      // merge fold from published segments. Verify still gates all of
-      // them every round; the bench stops timing the same contract
-      // twice.
-      "q296_coverage_matched_recall", // q304_sized_store_recall
-      "q292_bm25_index_merge", // q305_bm25_index_serve / q306
-      // round-17 (verdict ask #5, same precedent):
-      // - q304 serves the matched-coverage contract from the stores;
-      //   q295's in-memory scaled-k arm re-times the same chains
-      "q295_scaled_k_recall", // q304_sized_store_recall
-      // - q321 runs q314's EXACT decision measurement and then acts
-      //   on it — the production form; timing the decision alone
-      //   re-times the identical recall arms
-      "q314_ann_retrain_decision", // q321_ann_retrain_execute
-      // - compacted-layout delete serving binds q315/q316's strings;
-      //   the append-side compaction reads stay timed (q302/q306)
-      "q317_lex_delete_compact", // q315_lex_delete_serve
-      "q318_ann_delete_compact", // q316_ann_delete_serve
-      // - q326/q327 serve the tombstoned heads through the layout the
-      //   measured policy chose — the production form of the same
-      //   contracts q315/q316 time through the fixed masked layout
-      "q315_lex_delete_serve", // q326_lex_compaction_execute
-      "q316_ann_delete_serve", // q327_ann_compaction_execute
-      // - q331 runs q321's EXACT decision measurement + rotation and
-      //   then applies the takedown to the rotated store — the same
-      //   chain that demoted q314 for q321 (the execute re-times the
-      //   decision's recall arms, the query's dominant cost)
-      "q321_ann_retrain_execute", // q331_epoch_takedown_serve
-      // - the compacted-layout serves are now timed through the
-      //   policy-routed production forms (q326/q327 serve compacted
-      //   heads); q302/q306 re-time the same serving contracts over
-      //   the "" chain's compacted snapshot under the q299/q176
-      //   strings they share
-      "q302_ann_index_compact", // q327 (compacted-layout ADC serve)
-      "q306_bm25_index_compact", // q326 (compacted-layout BM25 serve)
-      // - the as-of-v0 contracts are q322/q323's version-0 arms over
-      //   the SAME prefix-shared segment bytes and oracle scopes
-      "q310_lex_asof_serve", // q322_lex_mixed_asof v0
-      "q311_ann_asof_serve" // q323_ann_mixed_asof v0
-    )
+    // the timed roster: every registered query, or just the named subset
     val names = SparkEntry.queries.keys.toSeq
       .filter(n => only.forall(_.contains(n)))
-      .filterNot(n => only.isEmpty && demoted.contains(n))
     // times(name) = one entry per rep that completed
     val times = scala.collection.mutable.LinkedHashMap(
       names.map(_ -> scala.collection.mutable.ListBuffer.empty[Double]): _*)

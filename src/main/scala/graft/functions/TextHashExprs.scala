@@ -116,16 +116,6 @@ object HashUtil {
     (v << 4) | ((d(7) >> 4) & 0xfL)
   }
 
-  /** First 32 bits of md5 (== first 8 hex nibbles) as a non-negative
-    * long — the `conv(substring(md5(s), 1, 8), 16, 10)` decode the
-    * q133/q134/q136 family uses, compiled.
-    */
-  def md5_32(bytes: Array[Byte]): Long = {
-    val d = tlMd.get().digest(bytes)
-    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-  }
-
   /** Unsigned lexicographic compare of two 16-byte digests — identical
     * ordering to comparing their 32-char hex encodings (each hex nibble
     * orders by value because '0'..'9' < 'a'..'f' in ASCII). */

@@ -1296,16 +1296,17 @@ object Agg {
     * ordinary mergeable aggregates, no buffers, at any group size. The
     * arithmetic mirrors Spark's `Percentile` exactly (pos = p·(n−1) in
     * double; result = v_lo·(ceil−pos) + v_hi·(pos−floor)), so the two
-    * engines are bit-equal BEFORE any display rounding — q262 binds this
-    * to q29's oracle string (one oracle, two quantile engines) and the
-    * spec pins raw-double equality against percentile().
+    * engines are bit-equal BEFORE any display rounding — q273 routes
+    * between them under one oracle string, and the spec pins raw-double
+    * equality against percentile().
     *
     * `ps` maps output column name → p in [0, 1].
     */
   /** The per-group percentile() BUFFER engine with
     * [[quantilesByDomain]]'s output contract — (key, <named quantiles>,
     * n) — so the two quantile engines are interchangeable call-for-call
-    * (they are bit-equal pre-rounding; q29/q262 share one oracle).
+    * (they are bit-equal pre-rounding; [[quantilesAuto]] routes between
+    * them under q273's one oracle).
     * Spark's Percentile aggregate holds each group's values in one
     * buffer: unbeatable while groups are modest, the measured ×16 bend
     * (30.1 s vs the domain engine's 7.2 s) once a group's buffer is

@@ -45,8 +45,8 @@ import org.apache.spark.sql.functions._
   * measurement/parity configuration — the frozen-append summary
   * contract q280≡q282≡q293 pins its oracle to the 0..7 cell grid, and
   * the q294 sweep replays the 8-seed kmeans chain — but serving
-  * consumers must NOT run the fixed k: q290/q295/q296 measure fixed-k
-  * recall degrading with corpus size, so q299/q300/q302 size the
+  * consumers must NOT run the fixed k: q290/q304 measure fixed-k
+  * recall degrading with corpus size, so q299/q300 size the
   * store they serve from via [[sizedParams]] (k = ⌈√n⌉,
   * probes = max(2, ⌈k/4⌉)) and their oracles derive the same
   * arithmetic in SQL. The PQ width m = 4 stays a constant by a
@@ -67,11 +67,11 @@ object AnnIndex {
     * the per-cell candidate bound n/k ≈ √n growing sub-linearly where
     * fixed k degrades (q290 measures boundary recall falling with
     * corpus size at k=8), and probes = max(2, ⌈k/4⌉) holds constant
-    * quarter coverage — the f = 1/4 column q296 measures BEATING the
+    * quarter coverage — the f = 1/4 column q304 measures BEATING the
     * fixed-k default at matched candidate-scan cost on every fixture
-    * (q295/q296, SCALE.md round 14). ONE definition shared by the
+    * (SCALE.md round 14). ONE definition shared by the
     * sized decontaminator (q298) and the physical store's serving
-    * consumers (q299/q300/q302), so the policy cannot drift between
+    * consumers (q299/q300), so the policy cannot drift between
     * the measurement, the curation engine, and the index (r14
     * verdict: the store must not ship the configuration its own
     * measurements refute).
@@ -262,8 +262,8 @@ object AnnIndex {
     StoreRead.parquet(spark, s"$p/probecents")
   }
 
-  // ---- delta-append maintenance (the q292 lifecycle for the ANN
-  // side) -------------------------------------------------------------
+  // ---- delta-append maintenance (the LexIndex.merge lifecycle for
+  // the ANN side) ----------------------------------------------------
   // The snapshot store above is write-once per corpus; a REAL vector
   // index also has to FOLD an ingest batch into its standing postings
   // without retraining or rewriting them (r13 verdict: q280/q282
@@ -284,7 +284,7 @@ object AnnIndex {
   // exactly the members versions 0..v hold, or a pre-append read
   // would rank probes against post-append information). Each segment
   // publishes atomically via StoreCommit; history stays queryable
-  // (time-travel); [[compactedPostings]] collapses the chain. Bound to
+  // (time-travel); [[compactedHeadPostings]] collapses a chain. Bound to
   // q280's oracle string: summarizing the merged head must equal the
   // in-memory frozen-append monitor — one contract, three engines
   // (in-memory q280, streaming q282, stored-merge q293).
@@ -545,47 +545,13 @@ object AnnIndex {
   // default history's two published segments byte-for-byte, so
   // "ensure the delete" writes exactly one tombstone segment. The
   // quantizer/codebooks are NOT retrained — a delete masks,
-  // compaction reclaims, resizing stays q314's measured decision
+  // compaction reclaims, resizing stays the measured retrain decision
   // (executed, when taken, by the epoch rotation below).
 
   /** The takedown split — vec_id % 7 === 3, mirroring
     * [[LexIndex.deleteSplit]]'s doc policy so a takedown pass removes
     * the same entities from both arms of the retrieval stack. */
   val deleteSplit: Column = col("vec_id") % 7 === 3
-
-  /** The head tombstone segment's store root — the "md" chain's last
-    * segment ([[appendVersionRoot]] prefix `std.d.del7`). */
-  def deleteRoot(dir: String, k: Int = 8, iters: Int = 2, m: Int = 4,
-                 codes: Int = 8): String =
-    appendVersionRoot(dir, 2L, k, iters, m, codes, chain = "md")
-
-  /** Publish the head tombstone segment — [[ensureAppendHistory]] of
-    * the "md" chain (the two append segments are the default chain's
-    * bytes, prefix-shared). Returns the tombstone segment's root. */
-  def ensureDeleteTombstones(spark: SparkSession, dir: String,
-                             k: Int = 8, iters: Int = 2, m: Int = 4,
-                             codes: Int = 8): String =
-    ensureAppendHistory(spark, dir, k, iters, m, codes,
-      chain = "md").last
-
-  /** The head's postings AFTER the tombstone delete — the "md"
-    * chain's head state: the segment fold masked by a broadcast
-    * anti-join on the tombstone ids (batch-sized by definition). */
-  def postingsAfterDelete(spark: SparkSession, dir: String, k: Int = 8,
-                          iters: Int = 2, m: Int = 4,
-                          codes: Int = 8): DataFrame =
-    postingsAsOf(spark, dir, version = 2L, k, iters, m, codes,
-      chain = "md")
-
-  /** Probe geometry AFTER the delete: the head's partials folded with
-    * the tombstone segment's negated partials — bit-identical to a
-    * one-pass [[Sim.cellCentroids]] over the survivors, emptied cells
-    * dropped. */
-  def probeCentsAfterDelete(spark: SparkSession, dir: String,
-                            k: Int = 8, iters: Int = 2, m: Int = 4,
-                            codes: Int = 8): DataFrame =
-    probeCentsAsOf(spark, dir, version = 2L, k, iters, m, codes,
-      chain = "md")
 
   /** The head version of a chain (the last segment's index). */
   def headVersion(chain: String = ""): Long =
@@ -597,8 +563,8 @@ object AnnIndex {
     * per-segment union + mask. Root keyed by the head's segment-id
     * prefix like every segment store. Serving from the compacted
     * snapshot must equal serving through the fold/mask — the
-    * q302/q318 invariance, and what lets the POLICY-routed serve
-    * (q327) switch layouts without changing answers. */
+    * invariance that lets the POLICY-routed serve (q327) switch
+    * layouts without changing answers. */
   def compactedHeadPostings(spark: SparkSession, dir: String,
                             k: Int = 8, iters: Int = 2, m: Int = 4,
                             codes: Int = 8,
@@ -617,15 +583,6 @@ object AnnIndex {
       })
     StoreRead.parquet(spark, s"$path/postings")
   }
-
-  /** Delete-compaction over the "md" chain's head —
-    * [[compactedHeadPostings]] at the tombstoned head (q318). */
-  def compactedPostingsAfterDelete(spark: SparkSession, dir: String,
-                                   k: Int = 8, iters: Int = 2,
-                                   m: Int = 4,
-                                   codes: Int = 8): DataFrame =
-    compactedHeadPostings(spark, dir, k, iters, m, codes,
-      chain = "md")
 
   /** Ensure the TIERED (minor) compaction of an all-append chain —
     * the segment-count arm of q324's policy executed the LSM way
@@ -700,20 +657,20 @@ object AnnIndex {
         .unionByName(StoreRead.parquet(spark, s"$tier/geoparts")))
   }
 
-  // ---- epoch rotation (round 17 — EXECUTING the retrain q314
-  // decides) -------------------------------------------------------------
-  // q314 measures the stale-vs-resized recall gap and emits the
-  // retrain/keep row; until r17 nothing could ACT on it — the store
+  // ---- epoch rotation (round 17 — EXECUTING the measured retrain
+  // decision) ------------------------------------------------------------
+  // Curate.retrainDecision measures the stale-vs-resized recall gap
+  // and emits the retrain/keep row; until r17 nothing could ACT on it — the store
   // could decide to retrain but not do it as a lifecycle operation
   // (r16 verdict ask #2). An EPOCH is a chain-root generation: epoch 0
   // is the frozen "base"-trained append history (every consumer above
   // this section); a RETRAIN decision publishes epoch 1 = the
   // from-scratch "full"-trained snapshot store at the resized k (built
   // by the SAME ensure path as every snapshot store — one training,
-  // shared with the q304/q314 resized arms) plus a 1-row rotation
+  // shared with the q304/retrain-decision resized arms) plus a 1-row rotation
   // RECORD naming the store it rotated to. Rotation writes only new
   // roots: the pre-retrain chain's bytes are untouched, so old-version
-  // time travel (q311/q313) reads exactly what it read before the
+  // time travel (q313/q323) reads exactly what it read before the
   // rotation — serving continuity is the epoch-0 history staying a
   // first-class read.
 
@@ -815,19 +772,4 @@ object AnnIndex {
         StoreRead.parquet(spark, s"$geo/geoparts")
           .unionByName(StoreRead.parquet(spark, s"$path/negparts"))))
   }
-
-  /** COMPACTION of the append history (q302 — the lifecycle's last
-    * step): rewrite the merged head's segment fold into one fresh,
-    * atomically-published snapshot store. Appends accrue per-segment
-    * file fragmentation (serving v_n unions n parquet directories);
-    * compaction folds the chain into a single coalesced postings file
-    * and the version history stays readable for audits — the
-    * content is row-for-row the head's fold, so serving from the
-    * compacted store MUST equal serving from the history head (q302
-    * binds q299's oracle string: one contract, two physical layouts).
-    */
-  def compactedPostings(spark: SparkSession, dir: String, k: Int = 8,
-                        iters: Int = 2, m: Int = 4,
-                        codes: Int = 8): DataFrame =
-    compactedHeadPostings(spark, dir, k, iters, m, codes, chain = "")
 }

@@ -573,7 +573,7 @@ object Curate {
     // QUANTIZER-INDEPENDENT (raw vectors + ids only), so with
     // `truthKey` it memoizes parquet-backed per (key, threshold) and
     // every recall harness over the same corpus/split reads ONE scan
-    // (q290/q295/q296 each otherwise re-derive it; lesson #1: durable
+    // (q290/q304 each otherwise re-derive it; lesson #1: durable
     // memos must be parquet-backed, not checkpoint-backed).
     val truthRaw = tr.crossJoin(broadcast(ev))
       .where(sim(col("tr_vec"), col("tr_norm"), col("ev_vec"),
@@ -644,64 +644,10 @@ object Curate {
             col("n_truth"), 4)).as("recall"))
   }
 
-  /** The quantizer-cell-count POLICY measured (r13 verdict #5): q290
+  /** Coverage-MATCHED quantizer-policy recall (r13 verdict #5): q290
     * shows boundary recall at FIXED k = 8 cells degrading as the
-    * corpus grows; the standard IVF sizing rule is k ∝ √n. This runs
-    * the [[semanticDeconRecall]] harness under BOTH policies on the
-    * same corpus — k = 8 (the family's fixture constant) and
-    * k = ⌈√n⌉ (n from a one-scalar count preflight, the q233
-    * dispatcher discipline) — so the driver's three scale factors
-    * trace recall-vs-scale for each policy side by side: the
-    * measurement that justifies (or refutes) scaling k with the
-    * corpus, instead of assuming the rule.
-    *
-    * Scale shape: the preflight is one COUNT scalar; each policy costs
-    * one deterministic kmeans train (k·dim driver floats — 45×64 at
-    * sf0.1, still bounded driver state) + the cell-blocked pair scan;
-    * the brute all-pairs truth inside the harness is the q40-role
-    * anchor, not the production path.
-    *
-    * Output: (policy, k, probes, n_truth, n_approx, n_hits, recall) —
-    * one row per policy × probe count.
-    */
-  def semanticDeconRecallScaledK(emb: DataFrame, isEval: Column,
-                                 threshold: Double, maxProbes: Int = 2,
-                                 idCol: String = "vec_id",
-                                 vecCol: String = "embedding",
-                                 cacheKey: Option[String] = None,
-                                 storedCells: Option[Int => DataFrame] =
-                                   None)
-      : DataFrame = {
-    require(maxProbes >= 1, s"need maxProbes >= 1, got $maxProbes")
-    val n = emb.count() // the one driver scalar — the sizing preflight
-    val kScaled = math.ceil(math.sqrt(n.toDouble)).toInt
-    // checkpoint each policy's assigned frame: the recall harness
-    // reads it three times (train side, eval side, probe geometry) and
-    // the scaled argmax is a k·dim-literal projection worth paying
-    // once. With `storedCells` (r15 — the verdict's reclaim lever) the
-    // assignment comes from the physical AnnIndex postings instead:
-    // bit-identical (q304 proves it under q296's oracle), and the
-    // query stops paying the k·dim-literal argmax codegen entirely —
-    // measured 4.3 → ~2.5 s on the bench tail.
-    def cellsAt(k: Int) = storedCells match {
-      case Some(src) => src(k)
-      case None => (cacheKey match {
-        case Some(key) =>
-          Sim.kmeansCellsCached(emb, k, 2, key, idCol, vecCol)
-        case None => Sim.kmeansCells(emb, k, 2, idCol, vecCol)
-      }).localCheckpoint()
-    }
-    def run(k: Int, policy: String) =
-      semanticDeconRecall(cellsAt(k), isEval, threshold, maxProbes,
-          idCol, vecCol, truthKey = cacheKey)
-        .select(lit(policy).as("policy"), lit(k).as("k"), col("probes"),
-          col("n_truth"), col("n_approx"), col("n_hits"), col("recall"))
-    run(8, "fixed8").unionByName(run(kScaled, "scaled_sqrt"))
-  }
-
-  /** Coverage-MATCHED quantizer-policy recall (the decision table
-    * [[semanticDeconRecallScaledK]] motivates): that measurement
-    * refutes the bare k = ⌈√n⌉ rule at a FIXED probe count — 2 of 45
+    * corpus grows, and the standard IVF sizing rule is k ∝ √n — but
+    * the bare k = ⌈√n⌉ rule at a FIXED probe count loses: 2 of 45
     * cells covers 4% of the space vs 2 of 8 = 25%, so scaled k
     * strictly lowers boundary recall. The fair comparison — and the
     * production policy — holds the probed FRACTION of cells constant
@@ -724,9 +670,8 @@ object Curate {
     * `cells/` frame — replacing the in-memory kmeans assignment. The
     * stored postings are the SAME deterministic quantizer's output
     * (shared training memos, bit-exact parquet round-trip), so the
-    * measurement binds the same oracle string: one contract, two
-    * engines (in-memory q296, store-served q304) — and the
-    * store-served row at three SFs is the direct evidence that the
+    * measurement is engine-independent — and the store-served row
+    * (q304) at three SFs is the direct evidence that the
     * PHYSICAL index sized by [[graft.ops.AnnIndex.sizing]] holds the
     * recall the fixed-k=8 store loses.
     *
@@ -830,7 +775,7 @@ object Curate {
     require(nStanding > 0 && nDelta >= 0,
       s"need a non-empty standing corpus, got ($nStanding, $nDelta)")
     require(frac > 0.0 && frac <= 1.0 && (frac * (1 << 20)).isWhole,
-      s"need a DYADIC coverage fraction (the q296 discipline), " +
+      s"need a DYADIC coverage fraction (the q304 discipline), " +
         s"got $frac")
     val kStale = math.ceil(math.sqrt(nStanding.toDouble)).toInt
     val kResized =

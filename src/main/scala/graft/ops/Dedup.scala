@@ -1074,6 +1074,11 @@ object Dedup {
     * so expected bucket size (and the pair join's fan-in) is n/32768
     * instead of n/16. Recall for hamming <= 3 is still exact by pigeonhole
     * (3 flipped bits cannot touch all 4 bands).
+    *
+    * Precondition: `idCol` is UNIQUE in `df` (a document id names one
+    * document). The first-match-wins filter emits each (id_a, id_b)
+    * once only because each id contributes one signature; a repeated
+    * id yields duplicate pair rows. Deduplicate ids upstream.
     */
   def simhashDupPairs60(df: DataFrame, idCol: String, textCol: String,
                         maxHamming: Int = 3): DataFrame = {
@@ -1115,6 +1120,12 @@ object Dedup {
     * The corpus-scale variant is [[simhashDupPairs60]] (q55): 15-bit
     * bands → 32768 LSH buckets per band, the same plan shape with a
     * bucket count that actually bounds the per-bucket join at scale.
+    *
+    * Precondition: `idCol` is UNIQUE in `df` (a document id names one
+    * document). The first-match-wins filter below replaced a pair-keyed
+    * distinct(), so each (id_a, id_b) is emitted once only because each
+    * id contributes one signature; a repeated id yields duplicate pair
+    * rows. Deduplicate ids upstream.
     */
   def simhashDupPairs(df: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3): DataFrame = {
@@ -1348,8 +1359,12 @@ object Dedup {
     * only through the small-star merge at the hub; stopping there
     * mislabels 3 as its own component (caught by the generated-input
     * CC-triple property; the q130 fixture never produces the shape).
-    * The check is counts + except on checkpointed frames (edge frames
-    * are O(nodes) after the first rounds, far smaller than the corpus).
+    * The check is ONE union aggregate per round over the three
+    * checkpointed edge frames (before, after large-star, after
+    * small-star): each distinct frame tags its (u, v) rows 1, 2 and 4,
+    * and the round converged iff every edge sums to 7 — exact set
+    * equality in one job (edge frames are O(nodes) after the first
+    * rounds, far smaller than the corpus).
     *
     * Returns (doc_id, component) for every node in some pair, component =
     * the smallest doc_id in the node's connected component — identical

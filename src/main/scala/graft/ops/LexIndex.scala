@@ -115,9 +115,8 @@ object LexIndex {
     * All four frames are sums of per-document counts, so
     * merge(build(A), build(B)) = build(A ∪ B) EXACTLY for disjoint
     * A, B — which is why the merged index can serve the same queries
-    * as a from-scratch build, bit-for-bit, under one oracle (q292
-    * binds q176's string: one contract, THREE engines — on-the-fly,
-    * stored, incremental-merge).
+    * as a from-scratch build, bit-for-bit, under one oracle (the
+    * segment-served q305 binds q176's string).
     *
     * Shape at scale: tf and dl rows are per-document → disjoint →
     * pure unions (no shuffle beyond the writes a real refresh does
@@ -176,12 +175,12 @@ object LexIndex {
   // chain (r16 advice), and the delete chain "md" reuses the ENTIRE
   // default history, adding one tombstone segment. Every version of a
   // mixed append→delete→append chain is an as-of-readable state (r16
-  // verdict ask #3). [[compactedFrames]] folds a chain into one fresh
+  // verdict ask #3). [[compactedHeadFrames]] folds a chain into one fresh
   // single-segment snapshot — serving-invariant because every frame
-  // is a sum of per-document counts (merge ≡ build(A∪B), the q292
-  // property; deletes are exact integer subtraction of per-document
-  // counts, the mirror image). Bound to q176's oracle string scoped
-  // per version's surviving corpus.
+  // is a sum of per-document counts (merge ≡ build(A∪B); deletes are
+  // exact integer subtraction of per-document counts, the mirror
+  // image). Bound to q176's oracle string scoped per version's
+  // surviving corpus.
 
   /** History-format version for the segment/compaction roots, bumped
     * INDEPENDENTLY of the snapshot store's [[V]] (r15 advice: a
@@ -442,16 +441,12 @@ object LexIndex {
   // surviving corpus's frames by the count-sum algebra. Compaction
   // physically drops the masked rows; serving from the compacted
   // survivors must equal serving through the mask (one contract, two
-  // layouts — the q306 discipline applied to deletes).
+  // layouts).
 
   /** The takedown split for the maintained index — doc_id % 7 === 3
     * cuts across BOTH the standing and delta slices, so a delete
     * exercises every segment of the history it masks. */
   val deleteSplit: Column = col("doc_id") % 7 === 3
-
-  /** The head tombstone segment's store root — the "md" chain's last
-    * segment ([[versionRoot]] prefix `std.d.del7`). */
-  def deleteRoot(dir: String): String = versionRoot(dir, 2L, "md")
 
   /** Publish the head tombstone segment — [[ensureAppendHistory]] of
     * the "md" chain; the two append segments are the default chain's
@@ -482,8 +477,8 @@ object LexIndex {
     * postings files, reads stop paying the per-segment union + mask.
     * Root keyed by the head's segment-id prefix like every segment
     * store. Serving from the compacted snapshot must equal serving
-    * through the fold/mask — the q306/q317 invariance, and what lets
-    * the POLICY-routed serve (q326) switch layouts without changing
+    * through the fold/mask — the invariance that lets the
+    * POLICY-routed serve (q326) switch layouts without changing
     * answers. */
   def compactedHeadFrames(spark: SparkSession, dir: String,
                           chain: String = "")
@@ -502,12 +497,6 @@ object LexIndex {
       })
     readFrames(spark, p)
   }
-
-  /** Delete-compaction over the "md" chain's head —
-    * [[compactedHeadFrames]] at the tombstoned head (q317). */
-  def compactedFramesAfterDelete(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    compactedHeadFrames(spark, dir, chain = "md")
 
   /** TIERED (minor) compaction of an all-append chain's head — the
     * segment-count arm of q324's policy EXECUTED the way a 100 TB
@@ -575,7 +564,8 @@ object LexIndex {
   /** One STREAMED micro-segment's write (the q309 gate): the same
     * four frames, with tf carrying tbkt as a PLAIN column rather than
     * a partition directory — a micro-batch segment is too small to
-    * bucket physically, and production compaction (q306's step) folds
+    * bucket physically, and production compaction
+    * ([[compactedHeadFrames]]) folds
     * streamed segments into the bucketed layout. The column is still
     * present, so the serving join's bucket filter applies to streamed
     * rows too.
@@ -602,16 +592,4 @@ object LexIndex {
     require(segs.nonEmpty, "need at least one segment to fold")
     segs.reduce((a, b) => merge(a, b, checkDisjoint = false))
   }
-
-  /** COMPACTION of the segment chain (the q302 step for the text
-    * side): materialize the merged head into one fresh single-segment
-    * snapshot — per-bucket single postings files, one file per side
-    * frame — atomically published. Serving from the compacted store
-    * MUST equal serving from the segment fold (q306 binds q176's
-    * oracle string), and reads stop paying the per-segment union +
-    * read-side df/stats re-aggregation.
-    */
-  def compactedFrames(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    compactedHeadFrames(spark, dir, chain = "")
 }

@@ -231,7 +231,10 @@ object Sim {
           sum(when(col("__hit"), element_at(wLit, col("rk")))
             .otherwise(0L)).as("dcg"),
           min(when(col("__hit"), col("rk"))).as("first_hit"))
-      broadcast(qFrame).join(perQ, Seq("q_id"), "left")
+      // no hint: qFrame is the preserved side, which a left outer join
+      // cannot build (Spark drops such a hint with a HintErrorLogger
+      // warning); the tiny perQ side broadcasts on its own
+      qFrame.join(perQ, Seq("q_id"), "left")
         .withColumn("idcg", element_at(pLit, col("n_t")))
         // integral DIV throughout — no double division anywhere, so
         // there is no float rounding for the engines to disagree on

@@ -159,10 +159,11 @@ private[graft] object Fragments {
          |${kmUpdate("a2", "c1", "c2")},
          |${kmAssign("c2", "af")}""".stripMargin
 
-    /** [[kmeansAfCte]] generalized for the scaled-k policy oracle
-      * (q295): the same 2-iteration deterministic chain with the seed
-      * count an arbitrary SQL expression (e.g. a ⌈√n⌉ scalar
-      * subquery) and every CTE name prefixed — ends in
+    /** [[kmeansAfCte]] generalized for the sized-policy oracles
+      * (q304, the retrain decision): the same 2-iteration
+      * deterministic chain with the seed count an arbitrary SQL
+      * expression (e.g. a ⌈√n⌉ scalar subquery) and every CTE name
+      * prefixed — ends in
       * `${p}af(vec_id, v, cell)`. Requires `e` in scope.
       */
     def kmeansChainAt(limitSql: String, p: String): String =
@@ -186,7 +187,7 @@ private[graft] object Fragments {
       * `af(vec_id, cell, sim_e9)`. `kSql` is the seed count — a
       * literal for the fixed parity grid (q280/q282/q293), or a
       * derived scalar (ceil-sqrt-count) for the sized serving oracles
-      * (q299/q300/q302); the final trained centroids stay named `c2`
+      * (q299/q300); the final trained centroids stay named `c2`
       * so a probe budget can be derived from `(SELECT COUNT(*) FROM
       * c2)` = k.
       */
@@ -472,8 +473,9 @@ private[graft] object Fragments {
         "\n) ORDER BY probes, list_k"
     }
 
-    // ONE Spearman oracle for BOTH engines (q209 windowed raw-frame,
-    // q230 domain-reduced + joint-domain joins): average ranks from
+    // ONE Spearman oracle for BOTH engines q233 routes between
+    // (windowed raw-frame, domain-reduced + joint-domain joins):
+    // average ranks from
     // per-group value-domain cumsums carried as exact doubled
     // integers; Pearson closed form on decimal sums
     val spearmanSql = {

@@ -91,54 +91,21 @@ private[graft] object Reg2Relational {
     }),
 
 
-    // §2.5 gap — exact interpolated percentiles per group. SCALE CEILING
-    // (documented in SCALE.md): exact percentile() keeps a per-group value
-    // buffer, so memory is O(largest group) per task — groups must fit
-    // executor memory. This is the exact variant of the q90 sketch path
-    // (percentile_approx = fixed-size KLL-style state); at 100 TB run q90,
-    // or pre-aggregate values to a bounded grid before q29.
-    // Stabilized with
-    // floor(x*100)/100, NOT round(): Spark rounds the shortest decimal
-    // repr (BigDecimal HALF_UP) while DuckDB rounds the binary value
+    // §2.5 gap — exact interpolated percentiles per group, with
+    // AUTOMATIC engine dispatch (Agg.quantilesAuto scaladoc; the
+    // q233/q272 pattern): a rows-per-group preflight routes to the
+    // percentile() buffer engine (Agg.quantilesByBuffer — one array
+    // percentile, O(largest group) memory per task) or the
+    // domain-histogram engine (Agg.quantilesByDomain — O(domain)
+    // mergeable state; the measured 30.1s-vs-7.2s ×16 bend) —
+    // bit-equal either way (EnginePairPropSpec pins the pair). This is
+    // the exact variant of the q90 sketch path (percentile_approx =
+    // fixed-size KLL-style state). Stabilized with floor(x*100)/100,
+    // NOT round(): Spark rounds the shortest decimal repr (BigDecimal
+    // HALF_UP) while DuckDB rounds the binary value
     // (std::round(x*100)/100), and interpolating 2dp money at f=0.5
-    // produces .xx5 ties where they disagree. floor over identical doubles
-    // is bit-deterministic in both engines.
-    "q29_quantiles" -> ((s, dir) => {
-      val f2 = (c: Column) => floor(c * 100) / 100
-      // one percentile buffer for both percentages (array form) — two
-      // separate percentile() aggs each keep their own per-group value
-      // buffer and double the aggregation cost
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          expr("percentile(l_extendedprice, array(0.5D, 0.9D))").as("ps"),
-          count(lit(1)).as("n"))
-        .select(col("l_returnflag"),
-          f2(col("ps")(0)).as("p50"), f2(col("ps")(1)).as("p90"), col("n"))
-        .orderBy("l_returnflag")
-    }),
-
-    // the quantile engine's SCALE path (Agg.quantilesByDomain
-    // scaladoc): q29's per-group percentile() value buffers replaced by
-    // the value-domain histogram + cumulative-count read-off — O(domain)
-    // mergeable state instead of O(largest group) buffers, bit-equal
-    // interpolation, bound to q29's IDENTICAL oracle string (one
-    // oracle, two quantile engines).
-    "q262_quantiles_domain" -> ((s, dir) => {
-      val f2 = (c: Column) => floor(c * 100) / 100
-      Agg.quantilesByDomain(t(s, dir, "lineitem"), "l_returnflag",
-          "l_extendedprice", Seq("p50" -> 0.5, "p90" -> 0.9))
-        .select(col("l_returnflag"), f2(col("p50")).as("p50"),
-          f2(col("p90")).as("p90"), col("n"))
-        .orderBy("l_returnflag")
-    }),
-
-    // quantiles with AUTOMATIC engine dispatch (Agg.quantilesAuto
-    // scaladoc; the q233/q272 pattern): a rows-per-group preflight
-    // routes to the percentile() buffer engine (modest groups) or the
-    // domain-histogram engine (the measured 30.1s-vs-7.2s ×16 bend) —
-    // bit-equal either way, bound to q29/q262's IDENTICAL oracle
-    // string: one oracle, three quantile engines, self-choosing.
+    // produces .xx5 ties where they disagree. floor over identical
+    // doubles is bit-deterministic in both engines.
     "q273_quantiles_auto" -> ((s, dir) => {
       val f2 = (c: Column) => floor(c * 100) / 100
       Agg.quantilesAuto(t(s, dir, "lineitem"), "l_returnflag",
@@ -809,10 +776,6 @@ private[graft] object Reg2Relational {
            |GROUP BY band ORDER BY band""".stripMargin,
 
 
-      "q29_quantiles" -> quantilesOracleSql,
-
-      // the domain-histogram engine answers to q29's IDENTICAL string
-      "q262_quantiles_domain" -> quantilesOracleSql,
       "q273_quantiles_auto" -> quantilesOracleSql,
 
 

@@ -285,7 +285,7 @@ private[graft] object Reg3Curation {
 
 
     // exact median via RANK SELECTION — the 100 TB-safe exact path for
-    // the q29/q108 percentile family: one spillable sort instead of a
+    // the q273/q108 percentile family: one spillable sort instead of a
     // per-group value buffer in the agg (SCALE.md "exact quantiles" row).
     // Identical result to percentile(0.5) by construction (middle order
     // statistics averaged = linear interpolation at p=0.5).
@@ -739,51 +739,12 @@ private[graft] object Reg3Curation {
         .orderBy("probes")),
 
 
-    // curation — the quantizer-cell-count POLICY measured (Curate.
-    // semanticDeconRecallScaledK scaladoc): q290 shows boundary
-    // recall at FIXED k=8 degrading with corpus size; this runs the
-    // same harness under k=8 AND k=⌈√n⌉ (one-scalar count preflight,
-    // the standard IVF sizing rule) side by side, at p ∈ {1,2} — the
-    // driver's three scale factors trace recall-vs-scale per policy,
-    // so "scale k with the corpus" is a measured decision, not a rule
-    // of thumb.
-    // (r15) the per-policy assignment scans read the physical
-    // AnnIndex postings — bit-identical to the in-memory quantizer
-    // (q304 proves it under q296's oracle), same oracle string, and
-    // the query stops paying the k·dim-literal argmax codegen (the
-    // bench's top non-attributed tail, 4.3 s → store-read)
-    "q295_scaled_k_recall" -> ((s, dir) =>
-      Curate.semanticDeconRecallScaledK(t(s, dir, "embeddings"),
-          isEval = col("vec_id") % 97 === 0, threshold = 0.25,
-          maxProbes = 2, cacheKey = Some(dir),
-          storedCells = Some(k =>
-            graft.ops.AnnIndex.cells(s, dir, "full", k = k)))
-        .orderBy("policy", "probes")),
-
-
-    // curation — the coverage-MATCHED policy table (Curate.
-    // semanticDeconRecallCoverage scaladoc): q295 refutes k=⌈√n⌉ at a
-    // FIXED probe count (2 of 45 cells covers 4% of the space vs
-    // 2 of 8 = 25%); this holds the probed FRACTION of cells constant
-    // (f ∈ {⅛, ¼}) and scales probes with k — the joint sizing policy
-    // production actually runs. Matched f means matched worst-case
-    // candidate-scan cost, so the table isolates what the finer
-    // quantizer buys: the driver's three scale factors trace whether
-    // scaled-k recall holds flat where q290 shows fixed-k degrading.
-    // Shares both trained quantizers with q295 via the same cacheKey.
-    "q296_coverage_matched_recall" -> ((s, dir) =>
-      Curate.semanticDeconRecallCoverage(t(s, dir, "embeddings"),
-          isEval = col("vec_id") % 97 === 0, threshold = 0.25,
-          fracs = Seq(0.125, 0.25), cacheKey = Some(dir))
-        .orderBy("policy", "coverage")),
-
-
-    // curation — q296's measured policy SHIPPED as an engine: the
+    // curation — q304's measured policy SHIPPED as an engine: the
     // corpus-scaled semantic decontaminator. A one-scalar count
     // preflight sizes the quantizer (k = ⌈√n⌉ — per-cell candidate
     // bound n/k stays flat as the corpus grows) and the probe budget
     // (probes = ⌈k/4⌉ — constant quarter-coverage, the f = 1/4 column
-    // q296 measures BEATING the fixed-k default at equal scan cost on
+    // q304 measures BEATING the fixed-k default at equal scan cost on
     // every fixture). Same audit-pair contract as q289; the oracle
     // replays the scaled chain and DERIVES the same probe budget in
     // SQL, so the sizing policy itself is driver-gated.
@@ -791,7 +752,7 @@ private[graft] object Reg3Curation {
       val emb = t(s, dir, "embeddings")
       val n = emb.count() // the sizing preflight (q233 discipline)
       // ONE policy definition (AnnIndex.sizing) shared with the
-      // physical store's serving consumers (q299/q300/q302) — the
+      // physical store's serving consumers (q299/q300) — the
       // probe floor at 2 is there because q290 measures own-cell-only
       // at 0.29-0.46 recall, so quarter-coverage never dips below the
       // multi-probe minimum
@@ -804,15 +765,18 @@ private[graft] object Reg3Curation {
     }),
 
 
-    // curation — q296's coverage-matched recall measurement SERVED
-    // FROM THE PHYSICAL INDEX (the r14 verdict's three-SF recall
-    // ask): both policy arms read AnnIndex `cells/` postings — fixed8
-    // from the k=8 store, scaled from the ⌈√n⌉-sized store — instead
-    // of assigning in memory, and bind q296's oracle string (one
-    // contract, two engines). The driver gate at each SF is the
-    // direct evidence that the PHYSICAL store sized by
-    // AnnIndex.sizing holds the recall the fixed-k=8 physical store
-    // loses as the corpus grows.
+    // curation — the coverage-MATCHED policy table (Curate.
+    // semanticDeconRecallCoverage scaladoc) SERVED FROM THE PHYSICAL
+    // INDEX (the r14 verdict's three-SF recall ask): it holds the
+    // probed FRACTION of cells constant (f ∈ {⅛, ¼}) and scales
+    // probes with k — matched f means matched worst-case
+    // candidate-scan cost, so the table isolates what the finer
+    // quantizer buys. Both policy arms read AnnIndex `cells/`
+    // postings — fixed8 from the k=8 store, scaled from the
+    // ⌈√n⌉-sized store. The oracle gate at each SF is the direct
+    // evidence that the PHYSICAL store sized by AnnIndex.sizing holds
+    // the recall the fixed-k=8 physical store loses as the corpus
+    // grows.
     "q304_sized_store_recall" -> ((s, dir) =>
       Curate.semanticDeconRecallCoverage(t(s, dir, "embeddings"),
           isEval = col("vec_id") % 97 === 0, threshold = 0.25,
@@ -822,126 +786,28 @@ private[graft] object Reg3Curation {
         .orderBy("policy", "coverage")),
 
 
-    // curation — the RETRAIN decision for the sized store
-    // (Curate.retrainDecision scaladoc; r15 verdict ask #3: k = ⌈√n⌉
-    // means growth that bumps ⌈√n⌉ invalidates the frozen store, and
-    // the q280 drift monitor was "the retrain-decision monitor"
-    // nothing consumed). The growth numbers are READ FROM THE
-    // MAINTAINED HISTORY HEAD (the monitor's artifact — n_standing /
-    // n_delta off the is_delta flags); the stale arm is the standing-
-    // sized frozen store serving the grown corpus (the AnnIndex
-    // "base" store at k = ⌈√n₀⌉ — trained on standing, indexing
-    // everything), the resized arm the full retrain at k = ⌈√n⌉;
-    // both measured at matched quarter coverage against the shared
-    // brute truth, and the emitted row IS the decision: retrain iff
-    // the size actually bumped AND the measured gain clears 2 pts of
-    // recall. The oracle replays both kmeans chains, both coverage
-    // arms, and the decision arithmetic — so the policy, not just the
-    // measurement, is driver-gated at every scale factor.
-    "q314_ann_retrain_decision" -> ((s, dir) => {
-      val (kSized, _) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val growth = graft.ops.AnnIndex
-        .postingsAsOf(s, dir, version = 1L, k = kSized)
-        .groupBy(col("is_delta")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-      Curate.retrainDecision(
-        isEval = col("vec_id") % 97 === 0, threshold = 0.25,
-        nStanding = growth.getOrElse(false, 0L),
-        nDelta = growth.getOrElse(true, 0L),
-        staleCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "base", k = k),
-        resizedCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "full", k = k),
-        cacheKey = Some(dir))
-    }),
-
-
-    // curation/ANN — EXECUTING the retrain q314 decides (r17; r16
-    // verdict ask #2: "the store can decide to retrain but cannot do
-    // it as a lifecycle op"). The query runs q314's measured decision
-    // (same growth inputs off the maintained head, same matched-
-    // coverage arms), then ACTS on it via AnnIndex.rotateIfRetrain:
-    // the RETRAIN branch publishes the resized full-corpus store as a
-    // new chain epoch (a 1-row rotation record + the standard
-    // snapshot ensure — old-version time travel keeps reading the
-    // pre-retrain chain untouched) and serves top-5 IVF-ADC from the
-    // rotated store; the KEEP branch serves the standing epoch's head
-    // (q299's exact contract). The oracle replays the decision AND
-    // both serving chains, selecting the branch by the derived flag —
-    // so which branch served, not just how it served, is driver-gated
-    // at every scale factor (the fixture flips: RETRAIN at
-    // sf0.001/sf0.1, keep at sf0.01).
-    "q321_ann_retrain_execute" -> ((s, dir) => {
-      val (kSized, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val growth = graft.ops.AnnIndex
-        .postingsAsOf(s, dir, version = 1L, k = kSized)
-        .groupBy(col("is_delta")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-      val dec = Curate.retrainDecision(
-        isEval = col("vec_id") % 97 === 0, threshold = 0.25,
-        nStanding = growth.getOrElse(false, 0L),
-        nDelta = growth.getOrElse(true, 0L),
-        staleCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "base", k = k),
-        resizedCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "full", k = k),
-        cacheKey = Some(dir)).collect()(0)
-      val epoch = graft.ops.AnnIndex.rotateIfRetrain(s, dir,
-        retrain = dec.getBoolean(10), kResized = kSized)
-      val codes =
-        if (epoch == 1)
-          graft.ops.AnnIndex.codes(s, dir, tag = "full", k = kSized)
-            .select((Seq(col("vec_id"), col("cell")) ++
-              graft.ops.AnnIndex.codeCols(4)): _*)
-        else graft.ops.AnnIndex
-          .postingsAsOf(s, dir, version = 1L, k = kSized)
-          .select((Seq(col("vec_id"), col("cell")) ++
-            graft.ops.AnnIndex.codeCols(4)): _*)
-      val tag = if (epoch == 1) "full" else "base"
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(codes.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentroids(s, dir, tag = tag,
-            k = kSized),
-          graft.ops.AnnIndex.books(s, dir, tag = tag, k = kSized),
-          k = 5, probes = probes)
-        .select(
-          lit(if (epoch == 1) "retrained" else "stale").as("branch"),
-          lit(epoch.toLong).as("epoch"),
-          col("q_id"), col("c_id"), col("rk"))
-        .orderBy("q_id", "rk")
-    }),
-
-
     // curation/ANN — the lifecycle ops COMPOSE (r17): a takedown
-    // issued AFTER q321's rotation must land on whichever epoch is
-    // serving. The query replays q314's measured decision, rotates
-    // when it says so, then applies the SAME takedown split to the
+    // issued AFTER a retrain rotation must land on whichever epoch is
+    // serving. The query runs the measured retrain decision
+    // ([[headRetrainDecision]]), EXECUTES it via
+    // AnnIndex.rotateIfRetrain (the RETRAIN branch publishes the
+    // resized full-corpus store as a new chain epoch; old-version
+    // time travel keeps reading the pre-retrain chain), then applies
+    // the SAME takedown split to the
     // serving store: the RETRAIN branch masks the rotated epoch-1
     // snapshot with its published tombstone artifact and ranks
     // probes against the published survivor geometry
     // (AnnIndex.epochTakedownStore); the KEEP branch is exactly the
-    // md chain's tombstoned head (q316's contract — the takedown on
-    // the standing epoch IS the delete segment). The oracle replays
+    // md chain's tombstoned head (the takedown on the standing epoch
+    // IS the delete segment). The oracle replays
     // the decision and BOTH survivor-scoped serving chains, selecting
     // by the derived flag — an engine that deleted from the wrong
-    // epoch, or rotated without deleting, fails the gate.
+    // epoch, or rotated without deleting, fails the gate. The fixture
+    // flips the branch by scale factor (RETRAIN at sf0.001/sf0.1, keep
+    // at sf0.01).
     "q331_epoch_takedown_serve" -> ((s, dir) => {
       val (kSized, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val growth = graft.ops.AnnIndex
-        .postingsAsOf(s, dir, version = 1L, k = kSized)
-        .groupBy(col("is_delta")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-      val dec = Curate.retrainDecision(
-        isEval = col("vec_id") % 97 === 0, threshold = 0.25,
-        nStanding = growth.getOrElse(false, 0L),
-        nDelta = growth.getOrElse(true, 0L),
-        staleCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "base", k = k),
-        resizedCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "full", k = k),
-        cacheKey = Some(dir)).collect()(0)
+      val dec = headRetrainDecision(s, dir).collect()(0)
       val epoch = graft.ops.AnnIndex.rotateIfRetrain(s, dir,
         retrain = dec.getBoolean(10), kResized = kSized)
       val (posts, cents, tag) =
@@ -971,65 +837,40 @@ private[graft] object Reg3Curation {
     })
   )
 
-  /** One policy's arm of the q295 oracle: the q290 probe-policy CTE
-    * tail (probe geometry from per-cell means, own-cell-wins pmin,
-    * cell-blocked candidate scan, per-p hit counts vs the SHARED
-    * `tru`/`nt`) with every CTE name prefixed so two quantizer
-    * policies replay side by side in one query. Requires `ev0`,
-    * `tr0`, `tru`, `nt` and the chain's `${p}af` in scope.
+  /** The RETRAIN decision for the sized store (Curate.retrainDecision
+    * scaladoc): k = ⌈√n⌉ means growth that bumps ⌈√n⌉ invalidates the
+    * frozen store. The growth numbers are READ FROM THE MAINTAINED
+    * HISTORY HEAD (n_standing / n_delta off its is_delta flags); the
+    * stale arm is the standing-sized frozen "base" store serving the
+    * grown corpus, the resized arm the full retrain at k = ⌈√n⌉, both
+    * measured at matched quarter coverage against the shared brute
+    * truth. The one-row result IS the decision: retrain iff the size
+    * actually bumped AND the measured gain clears 2 pts of recall.
     */
-  private def scaledKPolicyCtes(af: String, p: String,
-                                maxProbes: Int): String = {
-    val ps = (1 to maxProbes).map(i => s"($i)").mkString(", ")
-    s"""${p}ev AS (SELECT a.cell AS owncell, e0.eval_id, e0.evv, e0.evn
-       |  FROM ev0 e0 JOIN $af a ON a.vec_id = e0.eval_id),
-       |${p}tr AS (SELECT a.cell, t0.train_id, t0.trv, t0.trn
-       |  FROM tr0 t0 JOIN $af a ON a.vec_id = t0.train_id),
-       |${p}cm AS (SELECT cell, d.pos AS pos,
-       |    CAST(SUM(CAST(v[d.pos] AS DECIMAL(27,10))) AS DOUBLE)
-       |      / COUNT(*) AS m
-       |  FROM $af CROSS JOIN range(1, 65) AS d(pos)
-       |  GROUP BY cell, d.pos),
-       |${p}cent AS (SELECT cell,
-       |    list(CAST(CAST(m AS REAL) AS DOUBLE) ORDER BY pos) AS ce
-       |  FROM ${p}cm GROUP BY cell),
-       |${p}centn AS (SELECT cell, ce,
-       |    sqrt(list_sum(list_transform(ce, x -> x * x))) AS cn
-       |  FROM ${p}cent),
-       |${p}centp AS (SELECT eval_id, cell, GREATEST(pr, 2) AS pmin
-       |  FROM (
-       |  SELECT e.eval_id, c.cell,
-       |    row_number() OVER (PARTITION BY e.eval_id ORDER BY
-       |      ${Num.floorAtSql(
-           "list_sum(list_transform(range(1, 65)," +
-             " i -> e.evv[i] * c.ce[i])) / (e.evn * c.cn)", 9)} DESC,
-       |      c.cell ASC) AS pr
-       |  FROM ${p}ev e CROSS JOIN ${p}centn c)
-       |  WHERE pr <= $maxProbes),
-       |${p}ownp AS (SELECT eval_id, owncell AS cell, 1 AS pmin
-       |  FROM ${p}ev),
-       |${p}probe AS (SELECT eval_id, cell, MIN(pmin) AS pmin
-       |  FROM (SELECT * FROM ${p}ownp UNION ALL SELECT * FROM ${p}centp)
-       |  GROUP BY eval_id, cell),
-       |${p}cand AS MATERIALIZED (SELECT t.train_id, pb.eval_id, pb.pmin
-       |  FROM ${p}tr t
-       |  JOIN ${p}probe pb ON pb.cell = t.cell
-       |  JOIN ${p}ev e ON e.eval_id = pb.eval_id
-       |  WHERE floor((list_sum(list_transform(range(1, 65),
-       |      i -> t.trv[i] * e.evv[i])) / (t.trn * e.evn)) * 10000)
-       |      / 10000 >= 0.25),
-       |${p}stats AS (SELECT pp.p, COUNT(*) AS n_approx,
-       |    COUNT(b.train_id) AS n_hits
-       |  FROM (VALUES $ps) pp(p)
-       |  JOIN ${p}cand c ON c.pmin <= pp.p
-       |  LEFT JOIN tru b
-       |    ON b.train_id = c.train_id AND b.eval_id = c.eval_id
-       |  GROUP BY pp.p)""".stripMargin
+  private[graft] def headRetrainDecision(s: SparkSession,
+                                         dir: String): DataFrame = {
+    val (kSized, _) = graft.ops.AnnIndex.sizedParams(s, dir)
+    val growth = graft.ops.AnnIndex
+      .postingsAsOf(s, dir, version = 1L, k = kSized)
+      .groupBy(col("is_delta")).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
+    Curate.retrainDecision(
+      isEval = col("vec_id") % 97 === 0, threshold = 0.25,
+      nStanding = growth.getOrElse(false, 0L),
+      nDelta = growth.getOrElse(true, 0L),
+      staleCells = k =>
+        graft.ops.AnnIndex.cells(s, dir, "base", k = k),
+      resizedCells = k =>
+        graft.ops.AnnIndex.cells(s, dir, "full", k = k),
+      cacheKey = Some(dir))
   }
 
-  /** One policy's arm of the q296 oracle: [[scaledKPolicyCtes]] with
-    * the probe budgets DERIVED from coverage fractions instead of a
-    * static sweep — `${p}bud(coverage, p)` computes
+  /** One policy's arm of the coverage-matched recall replay: probe
+    * geometry from per-cell means, own-cell-wins pmin, cell-blocked
+    * candidate scan, and hit counts vs the SHARED `tru`/`nt`, with
+    * every CTE name prefixed so two quantizer policies replay side by
+    * side in one query. The probe budgets are DERIVED from coverage
+    * fractions — `${p}bud(coverage, p)` computes
     * p = max(1, ⌈k·f⌉) per fraction (binary-exact for dyadic f), the
     * probe ranking is cut at the policy's largest budget, and the
     * stats scan counts at exactly the budget probe counts. Requires
@@ -1088,7 +929,7 @@ private[graft] object Reg3Curation {
        |  GROUP BY pp.p)""".stripMargin
   }
 
-  /** The q296 per-policy output rows: one per coverage fraction,
+  /** The per-policy output rows: one per coverage fraction,
     * zero-filled, recall floored 4 dp vs the shared truth count. */
   private def coveragePolicyRows(p: String, policy: String,
                                  kSql: String): String =
@@ -1103,28 +944,10 @@ private[graft] object Reg3Curation {
        |FROM ${p}bud bud LEFT JOIN ${p}stats ON ${p}stats.p = bud.p
        |CROSS JOIN nt""".stripMargin
 
-  /** The q295 per-policy output rows: zero-filled per probe count,
-    * recall floored 4 dp vs the shared truth count. */
-  private def scaledKPolicyRows(p: String, policy: String,
-                                kSql: String, maxProbes: Int): String = {
-    val ps = (1 to maxProbes).map(i => s"($i)").mkString(", ")
-    s"""SELECT '$policy' AS policy, $kSql AS k,
-       |  CAST(pp.p AS INTEGER) AS probes, n_truth,
-       |  COALESCE(n_approx, 0) AS n_approx,
-       |  COALESCE(n_hits, 0) AS n_hits,
-       |  CASE WHEN n_truth = 0 THEN 1.0
-       |       ELSE ${Num.floorAtSql(
-           "CAST(COALESCE(n_hits, 0) AS DOUBLE) / n_truth", 4)}
-       |  END AS recall
-       |FROM (VALUES $ps) pp(p)
-       |LEFT JOIN ${p}stats ON ${p}stats.p = pp.p
-       |CROSS JOIN nt""".stripMargin
-  }
-
-  /** The coverage-matched two-policy recall replay — ONE string for
-    * the in-memory engine (q296) and the physical-store-served engine
-    * (q304): both arms' assignments are the same deterministic
-    * kmeans chains, so the measurement contract is engine-independent.
+  /** The coverage-matched two-policy recall replay (q304): both arms'
+    * assignments are the same deterministic kmeans chains the stores
+    * publish, so the measurement contract is independent of whether
+    * the engine assigns in memory or reads the postings.
     */
   private val coverageMatchedOracleSql: String =
     s"""WITH e AS (SELECT vec_id,
@@ -1158,7 +981,8 @@ private[graft] object Reg3Curation {
          "(SELECT CAST(ceil(sqrt(COUNT(*))) AS INTEGER) FROM e)")}
        |) ORDER BY policy, coverage""".stripMargin
 
-  /** The q314 retrain-decision replay: the STALE arm's chain is the
+  /** The retrain-decision replay ([[headRetrainDecision]]'s row, the
+    * decision half of q331): the STALE arm's chain is the
     * frozen-store discipline (kmeansFrozenCte — trained on the
     * standing slice at the STANDING corpus's ⌈√n₀⌉ seed budget,
     * assigning everything), the RESIZED arm the full-corpus chain at
@@ -1209,48 +1033,12 @@ private[graft] object Reg3Curation {
        |FROM strow st CROSS JOIN rzrow rz""".stripMargin
   }
 
-  /** The q321 retrain-EXECUTE replay: the q314 decision statement
+  /** The q331 epoch-takedown replay: [[retrainDecisionOracleSql]]
     * (verbatim, as a subquery — subqueries scope their CTEs) derives
-    * the flag; the KEEP branch is q299's serving string verbatim
-    * (Reg6MonitorAnn.annServeOracleSql — the standing head's
-    * contract); the RETRAIN branch retrains the FULL-corpus chain at
-    * ⌈√n⌉ from scratch (kmeansChainAt — the q304 "scaled" parity
-    * chain) with whole-corpus PQ codebooks and serves the q299 shape
-    * from it. The final SELECT picks the branch by the derived flag —
-    * both the decision and the serving it triggers are one gated
-    * contract. */
-  private def retrainExecuteOracleSql: String = {
-    val kNewSql =
-      "(SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) FROM e)"
-    val rtProbes = "GREATEST(2, CAST(ceil(CAST((SELECT COUNT(*) " +
-      "FROM rtc2) AS DOUBLE) * 0.25) AS INTEGER))"
-    s"""WITH dec AS MATERIALIZED (SELECT retrain FROM (
-       |$retrainDecisionOracleSql)),
-       |st AS (SELECT q_id, c_id, rk FROM (
-       |${Reg6MonitorAnn.annServeOracleSql})),
-       |rt AS (SELECT q_id, c_id, rk FROM (
-       |WITH e AS (SELECT vec_id,
-       |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |${kmeansChainAt(kNewSql, "rt")},
-       |${pqChainsSql(4, 8, 16, 2)},
-       |${hybridDenseAdcCteOver("rtaf", 5, rtProbes)}
-       |SELECT q_id, c_id, rk_emb AS rk FROM dena))
-       |SELECT 'retrained' AS branch, CAST(1 AS BIGINT) AS epoch,
-       |  q_id, c_id, rk
-       |FROM rt WHERE (SELECT retrain FROM dec)
-       |UNION ALL
-       |SELECT 'stale' AS branch, CAST(0 AS BIGINT) AS epoch,
-       |  q_id, c_id, rk
-       |FROM st WHERE NOT (SELECT retrain FROM dec)
-       |ORDER BY q_id, rk""".stripMargin
-  }
-
-  /** The q331 epoch-takedown replay: q314's decision statement
-    * derives the flag; the KEEP branch is the md chain's tombstoned
-    * head serve verbatim (Reg6MonitorAnn.annDeleteOracleSql — the
-    * takedown on the standing epoch IS the delete segment, q316's
-    * string); the RETRAIN branch retrains the full-corpus chain at
+    * the flag; the KEEP branch is the md chain's tombstoned head
+    * serve verbatim (Reg6MonitorAnn.annDeleteOracleSql — the
+    * takedown on the standing epoch IS the delete segment); the
+    * RETRAIN branch retrains the full-corpus chain at
     * ⌈√n⌉ and serves the q299 shape from its SURVIVORS — victims out
     * as queries and candidates, probe geometry the survivors' member
     * means. The final SELECT picks the branch by the derived flag, so
@@ -1393,7 +1181,7 @@ private[graft] object Reg3Curation {
 
       // exact twin of q90: quantile_cont == Spark percentile (both linear
       // interpolation); floor-at-2dp stabilizes the interpolated double
-      // (same recipe as q29)
+      // (same recipe as q273)
       "q108_exact_profile" ->
         """SELECT event_type,
           | COUNT(DISTINCT user_id) AS n_users,
@@ -2219,57 +2007,11 @@ private[graft] object Reg3Curation {
            |CROSS JOIN nt ORDER BY probes""".stripMargin
       },
 
-      // TWO kmeans chains (k=8 and the ⌈√n⌉ scalar-subquery seed) +
-      // the q290 probe-policy recall tail replayed per policy against
-      // ONE shared brute truth (truth is quantizer-independent)
-      "q295_scaled_k_recall" ->
-        s"""WITH e AS (SELECT vec_id,
-           |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           |  FROM embeddings),
-           |${kmeansChainAt("8", "fx")},
-           |${kmeansChainAt(
-             "(SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) FROM e)",
-             "sc")},
-           |ev0 AS MATERIALIZED (SELECT vec_id AS eval_id, v AS evv,
-           |    sqrt(list_sum(list_transform(v, x -> x * x))) AS evn
-           |  FROM e WHERE vec_id % 97 = 0),
-           |tr0 AS MATERIALIZED (SELECT vec_id AS train_id, v AS trv,
-           |    sqrt(list_sum(list_transform(v, x -> x * x))) AS trn
-           |  FROM e WHERE NOT (vec_id % 97 = 0)),
-           |tru AS MATERIALIZED (SELECT train_id, eval_id FROM (
-           |  SELECT t.train_id, e.eval_id,
-           |    floor((list_sum(list_transform(range(1, 65),
-           |      i -> t.trv[i] * e.evv[i])) / (t.trn * e.evn)) * 10000)
-           |      / 10000 AS sim
-           |  FROM tr0 t CROSS JOIN ev0 e) WHERE sim >= 0.25),
-           |nt AS (SELECT COUNT(*) AS n_truth FROM tru),
-           |${scaledKPolicyCtes("fxaf", "fx", 2)},
-           |${scaledKPolicyCtes("scaf", "sc", 2)}
-           |SELECT * FROM (
-           |${scaledKPolicyRows("fx", "fixed8",
-             "CAST(8 AS INTEGER)", 2)}
-           |UNION ALL
-           |${scaledKPolicyRows("sc", "scaled_sqrt",
-             "(SELECT CAST(ceil(sqrt(COUNT(*))) AS INTEGER) FROM e)",
-             2)}
-           |) ORDER BY policy, probes""".stripMargin,
-
-      // the q295 two-chain replay with probe budgets DERIVED from
-      // coverage fractions (p = max(1, ⌈k·f⌉), binary-exact for
-      // dyadic f) instead of a static sweep — one recall row per
-      // policy × fraction against the SAME shared brute truth
-      "q296_coverage_matched_recall" -> coverageMatchedOracleSql,
-
-      // the SAME string: the store-served arms read AnnIndex postings
-      // whose quantizer is the identical deterministic training (one
-      // contract, two engines — in-memory q296, physical-store q304)
+      // two kmeans chains (k=8 and the ⌈√n⌉ scalar-subquery seed)
+      // with probe budgets DERIVED from coverage fractions
+      // (p = max(1, ⌈k·f⌉), binary-exact for dyadic f) — one recall
+      // row per policy × fraction against ONE shared brute truth
       "q304_sized_store_recall" -> coverageMatchedOracleSql,
-
-      // both quantizer chains (frozen-standing at ⌈√n₀⌉, full at
-      // ⌈√n⌉), both coverage-matched recall arms, and the decision
-      // arithmetic replayed — the retrain policy itself driver-gated
-      "q314_ann_retrain_decision" -> retrainDecisionOracleSql,
-      "q321_ann_retrain_execute" -> retrainExecuteOracleSql,
 
       // the epoch-takedown composition: decision replayed, then the
       // takedown's survivor serve on WHICHEVER epoch the flag picks

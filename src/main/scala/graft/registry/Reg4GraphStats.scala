@@ -623,7 +623,7 @@ private[graft] object Reg4GraphStats {
     }),
 
 
-    // north star — the TAKEDOWN re-plan (r16, composing the q315-q318
+    // north star — the TAKEDOWN re-plan (r16, composing the tombstone
     // delete lifecycle into the curation surface): after a takedown
     // pass (doc_id%7=3), the mixture planner re-budgets over the
     // SURVIVING corpus with every input read from maintained

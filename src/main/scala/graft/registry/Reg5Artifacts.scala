@@ -243,34 +243,6 @@ private[graft] object Reg5Artifacts {
     }),
 
 
-    // artifacts — INCREMENTAL inverted-index maintenance (LexIndex.
-    // merge scaladoc): the corpus split 80/20, each slice indexed
-    // alone, the delta FOLDED into the standing frames with three
-    // count-sum aggregates (postings never rebuild — the q280 append
-    // story for text), and q176's queries served from the merged
-    // index. Bound to q176's oracle string: one contract, THREE
-    // engines (on-the-fly q176, stored q291, incremental-merge q292).
-    "q292_bm25_index_merge" -> ((s, dir) => {
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val merged = graft.ops.LexIndex.merge(
-        graft.ops.LexIndex.buildFrames(
-          docs.where(col("doc_id") % 5 =!= 0)),
-        graft.ops.LexIndex.buildFrames(
-          docs.where(col("doc_id") % 5 === 0)))
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          merged._1, merged._2, merged._3, merged._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
-
-
     // artifacts — the maintained inverted index SERVES FROM STORAGE
     // (r15, the LexIndex segment lifecycle — the AnnIndex q299 shape
     // for text): segment 0 = the standing slice's four frames,
@@ -278,8 +250,7 @@ private[graft] object Reg5Artifacts {
     // ∝ batch and never touches a standing posting byte), and q176's
     // queries rank from the segments' published bytes folded at read
     // (tf/dl pure unions, df/stats re-summed — merge ≡ build(A∪B),
-    // q292's property). Bound to q176's oracle string: one contract,
-    // five engines.
+    // the LexIndex.merge property). Bound to q176's oracle string.
     "q305_bm25_index_serve" -> ((s, dir) => {
       import s.implicits._
       val head = graft.ops.LexIndex.framesAsOf(s, dir, 1L)
@@ -296,37 +267,13 @@ private[graft] object Reg5Artifacts {
     }),
 
 
-    // artifacts — TIME-TRAVEL serving (the audit read a maintained
-    // index owes its operators): q176's queries served from segment 0
-    // ALONE — the index exactly as it stood before the append, with
-    // df/dl/stats all scoped to the standing corpus (what segment 0
-    // physically stores). The oracle is the BM25 chain restricted to
-    // the standing slice, so "as of version 0" is itself an
-    // oracle-gated contract, not just a readable directory.
-    "q310_lex_asof_serve" -> ((s, dir) => {
-      import s.implicits._
-      val v0 = graft.ops.LexIndex.framesAsOf(s, dir, 0L)
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          v0._1, v0._2, v0._3, v0._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
-
-
     // artifacts — STREAMING segment appends (the q282 frozen-append
     // story for text; StreamOps.lexAppendGate scaladoc): the delta
     // slice replayed as 3 real micro-batches, each indexed alone and
     // published as its own segment (write ∝ batch), then q176's
     // queries served from the standing-∪-streamed fold — bound to
-    // q176's oracle string: with q176/q291/q292/q305/q306 the BM25
-    // contract now has SIX provably-equal engines, and the text
-    // index's ingest path is gated under a REAL multi-micro-batch
+    // q176's oracle string with q291/q305, and the text index's ingest
+    // path is gated under a REAL multi-micro-batch
     // streaming replay like the ANN side's q282.
     "q309_stream_lex_append" -> ((s, dir) =>
       graft.streaming.StreamOps.docsGateResult(s, dir,
@@ -357,38 +304,14 @@ private[graft] object Reg5Artifacts {
     // (ids + negative df/stats counts), then q176's queries served
     // from the head masked by the union of committed tombstones with
     // the count negatives folded off the pre-folded cums — bound to
-    // q315's oracle string, so batch and streaming takedown are
-    // provably ONE maintenance operator (the q280≡q282 / q305≡q309
-    // discipline, now for deletes).
+    // the surviving-corpus BM25 string, whose batch twin is q326's md
+    // arm, so batch and streaming takedown are provably ONE
+    // maintenance operator (the q280≡q282 / q305≡q309 discipline, now
+    // for deletes).
     "q320_stream_takedown" -> ((s, dir) =>
       graft.streaming.StreamOps.docsGateResult(s, dir,
           "q320_stream_takedown")
         .orderBy("query_id", "rk")),
-
-
-    // artifacts — inverted-index COMPACTION (the q302 step for text):
-    // the segment chain folded into one fresh single-segment snapshot
-    // (per-bucket single postings files; reads stop paying the
-    // per-segment union and the read-side df/stats re-aggregation),
-    // then the SAME serving as q305 runs against it — bound to q176's
-    // oracle string, so the driver gate proves compaction is
-    // serving-invariant. With q291/q292/q305 the text index now
-    // closes build → append → serve → compact under oracle gates,
-    // matching the ANN side's lifecycle.
-    "q306_bm25_index_compact" -> ((s, dir) => {
-      import s.implicits._
-      val c = graft.ops.LexIndex.compactedFrames(s, dir)
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          c._1, c._2, c._3, c._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
 
 
     // artifacts — MID-CHAIN time-travel serving (r15 verdict ask #6:
@@ -411,58 +334,6 @@ private[graft] object Reg5Artifacts {
             ("kw_win", "window batch sort"))
             .toDF("query_id", "query_text"),
           v1._1, v1._2, v1._3, v1._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
-
-
-    // artifacts — tombstone DELETES (r16; LexIndex delete scaladoc):
-    // the lifecycle's missing production operation — a takedown pass
-    // (doc_id%7=3) publishes ONE tombstone segment (the deleted ids +
-    // the deleted docs' own count frames as a NEGATIVE segment; cost
-    // ∝ batch, no standing posting byte read), and q176's queries
-    // serve from the masked head: tf/dl anti-join the broadcast
-    // tombstones, df/stats read the pre-folded AFTER frames (head cum
-    // − deleted counts, zero-df terms dropped — exact integer
-    // algebra). The oracle is the BM25 chain over the SURVIVING
-    // corpus, so the delete's effect on every BM25 component (df, dl,
-    // avgdl, n_docs) is driver-gated — a masked index that silently
-    // served stale df would fail the gate.
-    "q315_lex_delete_serve" -> ((s, dir) => {
-      import s.implicits._
-      val f = graft.ops.LexIndex.framesAfterDelete(s, dir)
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          f._1, f._2, f._3, f._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
-
-
-    // artifacts — delete COMPACTION (the reclaim step every tombstone
-    // design needs, or masked rows accrete forever): the surviving
-    // postings physically rewritten into one fresh snapshot, the
-    // tombstoned rows dropped for real, then the SAME serving as q315
-    // runs against it — bound to q315's oracle string (one contract,
-    // two layouts: masked fold / compacted survivors). With
-    // q291/q305/q306/q309/q310/q312 the text index now closes
-    // build → append → serve → delete → compact under oracle gates.
-    "q317_lex_delete_compact" -> ((s, dir) => {
-      import s.implicits._
-      val c = graft.ops.LexIndex.compactedFramesAfterDelete(s, dir)
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          c._1, c._2, c._3, c._4, k = 5)
         .select(col("query_id"), col("id").as("doc_id"),
           col("n_matched"), col("score"), col("rk"))
         .orderBy("query_id", "rk")
@@ -503,16 +374,17 @@ private[graft] object Reg5Artifacts {
 
 
     // artifacts — EXECUTING the compaction q324 decides (r17, the
-    // q321 decide→act pattern applied to the text index): the policy
+    // q331 decide→act pattern applied to the text index): the policy
     // row is MEASURED from the stores (chainStatsFrame — the q324
     // inputs), then each tombstoned chain's head SERVES FROM THE
     // LAYOUT THE POLICY CHOSE — "md" clears the 1/8 tombstone-share
     // threshold and serves from the compacted survivors (the reclaim
     // executed), "m3" sits under it and serves through the mask. Rows
-    // are layout-invariant by the compaction contract (q317 proved
-    // masked ≡ compacted), so the oracle pins WHICH layout served via
-    // the replayed policy flag in the layout column — an engine that
-    // compacted without the decision, or ignored it, fails the gate.
+    // are layout-invariant by the compaction contract (masked ≡
+    // compacted, LexIndex.compactedHeadFrames), so the oracle pins
+    // WHICH layout served via the replayed policy flag in the layout
+    // column — an engine that compacted without the decision, or
+    // ignored it, fails the gate.
     "q326_lex_compaction_execute" -> ((s, dir) => {
       import s.implicits._
       val decisions = graft.ops.LexIndex
@@ -1005,12 +877,10 @@ private[graft] object Reg5Artifacts {
       // (LexIndex postings, zero corpus tokenization at query
       // time) must rank bit-identically to the on-the-fly form
       "q291_bm25_stored" -> bm25RetrievalOracleSql,
-      "q292_bm25_index_merge" -> bm25RetrievalOracleSql,
       // the stored-segment serve, the compacted snapshot, and the
       // streaming-append fold bind the SAME retrieval contract — six
       // engines, one string
       "q305_bm25_index_serve" -> bm25RetrievalOracleSql,
-      "q306_bm25_index_compact" -> bm25RetrievalOracleSql,
       "q309_stream_lex_append" -> bm25RetrievalOracleSql,
 
       // the streaming auto-compaction contract: rows are the q176
@@ -1023,23 +893,12 @@ private[graft] object Reg5Artifacts {
            |    AS layout, * FROM (
            |$bm25RetrievalOracleSql)
            |ORDER BY query_id, rk""".stripMargin,
-      // the as-of-v0 contract: the SAME chain scoped to the standing
-      // slice — what segment 0 physically stores
-      "q310_lex_asof_serve" ->
-        bm25RetrievalOracleSqlOver("NOT (doc_id % 5 = 0)"),
       // the MID-CHAIN contract: the same chain scoped to
       // standing ∪ first ingest batch — the corpus as it stood
       // between the c3 chain's two appends
       "q312_lex_midchain_serve" ->
         bm25RetrievalOracleSqlOver(
           "NOT (doc_id % 5 = 0) OR doc_id % 10 = 0"),
-      // the post-delete contract: the same chain over the SURVIVING
-      // corpus — what the masked head (q315) and the compacted
-      // survivors (q317) must both serve
-      "q315_lex_delete_serve" ->
-        bm25RetrievalOracleSqlOver("NOT (doc_id % 7 = 3)"),
-      "q317_lex_delete_compact" ->
-        bm25RetrievalOracleSqlOver("NOT (doc_id % 7 = 3)"),
       // the streaming-takedown fold binds the same surviving-corpus
       // contract — batch and streamed deletes, one string
       "q320_stream_takedown" ->
@@ -1047,7 +906,7 @@ private[graft] object Reg5Artifacts {
       // the compaction-EXECUTE contract: the policy rule replayed per
       // chain picks the layout label; the serve rows are the family
       // chain scoped to each tombstoned head's survivors (layout-
-      // invariant by the q317 compaction contract)
+      // invariant by the compaction contract)
       "q326_lex_compaction_execute" -> {
         val mdRule = "((SELECT COUNT(*) FROM documents WHERE " +
           "doc_id % 7 = 3) * 1000000) // " +
@@ -1918,11 +1777,11 @@ private[graft] object Reg5Artifacts {
   // ONE string for the on-the-fly (q176) and stored-index (q291)
   // engines.
   /** The BM25 chain parameterized by a document predicate — "TRUE"
-    * is the full-corpus contract (q176 and its five engine twins);
-    * the standing-slice instance is q310's as-of-v0 serving contract
-    * (the index as it stood BEFORE the append — df/dl/stats all
-    * computed over the standing corpus only, which is exactly what
-    * segment 0 stores).
+    * is the full-corpus contract (q176 and its engine twins);
+    * a standing-slice instance is an as-of-v0 serving contract
+    * (q322's version-0 arm: the index as it stood BEFORE the append —
+    * df/dl/stats all computed over the standing corpus only, which is
+    * exactly what segment 0 stores).
     */
   private def bm25RetrievalOracleSqlOver(docWhere: String): String =
         s"""WITH q(query_id, query_text) AS (VALUES

@@ -60,15 +60,6 @@ private[graft] object Reg6MonitorAnn {
         .presentLargeBy("id_a", "id_b")),
 
 
-    // monitoring — per-group Spearman rank correlation
-    // (Agg.spearmanCorr scaladoc): Pearson on average ranks with exact
-    // doubled-integer rank sums; outlier-proof monotone association.
-    "q209_spearman" -> ((s, dir) =>
-      Agg.spearmanCorr(t(s, dir, "lineitem"), "l_returnflag",
-          "l_quantity", "l_extendedprice")
-        .orderBy("l_returnflag")),
-
-
     // layout — zone-map effectiveness audit (Layout.zoneMapAudit
     // scaladoc): measured skip ratios for natural vs single-sort vs
     // z-order layouts under date and partkey range predicates — the
@@ -386,18 +377,6 @@ private[graft] object Reg6MonitorAnn {
     }),
 
 
-    // monitoring — the DISTRIBUTED-exact Spearman engine
-    // (Agg.spearmanCorrDomain scaladoc), pinned to q209's oracle: same
-    // doubled-average-rank arithmetic from domain windows + two
-    // joint-domain hash joins, for the few-giant-groups inputs where
-    // q209's per-key window serializes (the CC-family pattern: one
-    // oracle, engine per scale regime).
-    "q230_spearman_domain" -> ((s, dir) =>
-      Agg.spearmanCorrDomain(t(s, dir, "lineitem"), "l_returnflag",
-          "l_quantity", "l_extendedprice")
-        .orderBy("l_returnflag")),
-
-
     // north star — OR-amplified sign-LSH recall sweep (Sim.topKLsh
     // scaladoc; Gionis/Indyk/Motwani 1999): realized recall@5 vs brute
     // truth for L = 1/2/4 independent hyperplane tables at bits = 4 —
@@ -429,7 +408,8 @@ private[graft] object Reg6MonitorAnn {
 
 
     // monitoring — AUTO-dispatched Spearman (Agg.spearmanEngine
-    // scaladoc), pinned to q209/q230's oracle: the preflight is
+    // scaladoc) over the windowed Agg.spearmanCorr and the
+    // domain-reduced Agg.spearmanCorrDomain: the preflight is
     // TWO-dimensional (r14, shipping the round-10 ScaleProbe
     // finding) — group cardinality AND tie density. lineitem's
     // 3-value l_returnflag is few-giant-groups, but its near-unique
@@ -437,8 +417,8 @@ private[graft] object Reg6MonitorAnn {
     // the WINDOWED engine (measured 1.48 s vs the domain engine's
     // 3.23 s at sf0.1); the domain engine is reserved for the
     // tie-heavy regime where it measured 13.7x better. Output is
-    // bit-identical to both siblings by construction — THREE queries,
-    // ONE oracle string.
+    // bit-identical to both engines by construction
+    // (EnginePairPropSpec pins the pair).
     "q233_spearman_auto" -> ((s, dir) =>
       Agg.spearmanAuto(t(s, dir, "lineitem"), "l_returnflag",
           "l_quantity", "l_extendedprice")
@@ -835,7 +815,7 @@ private[graft] object Reg6MonitorAnn {
     }),
 
     // streaming — the PSI drift monitor DRIVER-GATED (StreamOps
-    // .runPsiMonitorGate scaladoc): previously spec-only because
+    // .stageEventsByDayBucket scaladoc): previously spec-only because
     // per-batch rows depended on the physical file split; day-bucket
     // staging makes batch b's membership a deterministic function of
     // the data (day index mod buckets), so every per-batch PSI row is
@@ -1046,7 +1026,7 @@ private[graft] object Reg6MonitorAnn {
 
 
     // ANN — the index-maintenance lifecycle CLOSED (AnnIndex append
-    // history scaladoc, the q292 story for the ANN side): the delta
+    // history scaladoc, the LexIndex.merge story for the ANN side): the delta
     // slice is assigned + PQ-encoded under the frozen STORED
     // quantizer and FOLDED into the standing postings as a new
     // atomically-published version — v1 = v0's published bytes
@@ -1089,7 +1069,7 @@ private[graft] object Reg6MonitorAnn {
     // re-assigned at query time. SIZED by the measured policy
     // (AnnIndex.sizedParams — k = ⌈√n⌉, probes = max(2, ⌈k/4⌉) from a
     // one-count preflight; r14 verdict: serving must not run the
-    // fixed k=8 its own q290/q295/q296 measurements refute). The
+    // fixed k=8 its own q290/q304 measurements refute). The
     // oracle retrains the whole frozen chain from scratch in SQL
     // (base-slice training at a DERIVED ceil-sqrt-count seed budget,
     // whole-corpus assignment and codes, probes derived from the
@@ -1118,7 +1098,7 @@ private[graft] object Reg6MonitorAnn {
     // ANN/retrieval — the FULLY-MAINTAINED hybrid: q287's RRF fusion
     // with BOTH arms served from maintained index heads — the lexical
     // arm from the standing inverted index MERGED with a delta index
-    // (q292's lifecycle; merge ≡ build(all) exactly), the dense arm
+    // (LexIndex.merge; merge ≡ build(all) exactly), the dense arm
     // from the ANN append history's merged head under the frozen base
     // store (q293/q299's lifecycle). Nothing is retrained, re-signed,
     // or re-encoded at query time on either arm. The oracle retrains
@@ -1147,46 +1127,6 @@ private[graft] object Reg6MonitorAnn {
             graft.ops.AnnIndex.probeCentroids(s, dir, tag = "base",
               k = k))),
           lexStore = Some(mergedLex), probes = probes)
-        .orderBy("q_id", "rk")
-    }),
-
-
-    // ANN — index COMPACTION, the lifecycle's last step
-    // (AnnIndex.compactedPostings scaladoc): the merged head rewritten
-    // into one fresh single-file snapshot store (appends accrue
-    // per-version file fragmentation; compaction folds the chain),
-    // then the SAME top-5 serving as q299 runs against the compacted
-    // store — bound to q299's oracle string, so the driver gate
-    // proves compaction is serving-invariant. One contract, two
-    // physical layouts (versioned history / compacted snapshot), and
-    // with q280/q282/q293 the frozen-append family now closes
-    // build → append → serve → compact under oracle gates throughout.
-    // ANN — TIME-TRAVEL serving (q310's story for the dense side):
-    // top-5 IVF-ADC retrieval from the append history AS OF version
-    // 0 — the standing index exactly as it stood before the append.
-    // Candidates, own-cells, and the probe geometry are all scoped to
-    // v0's postings (each version now stores its OWN probecents —
-    // ranking a pre-append read against whole-corpus geometry would
-    // leak the append into the past); codebooks stay the frozen base
-    // chain. The oracle restricts the retrained frozen chain's
-    // corpus side to the standing slice, so "as of v0" is an
-    // oracle-gated serving contract at the sized k/probes.
-    "q311_ann_asof_serve" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val v0 = graft.ops.AnnIndex.postingsAsOf(s, dir, version = 0L,
-        k = k)
-      val codes = v0.select(
-        (Seq(col("vec_id"), col("cell")) ++
-          graft.ops.AnnIndex.codeCols(4)): _*)
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(v0.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentsAsOf(s, dir, version = 0L,
-            k = k),
-          graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-          k = 5, probes = probes)
-        .select(col("q_id"), col("c_id"), col("rk"))
         .orderBy("q_id", "rk")
     }),
 
@@ -1225,67 +1165,9 @@ private[graft] object Reg6MonitorAnn {
     }),
 
 
-    // ANN — tombstone DELETES (r16, the q315 lex shape on the dense
-    // side; AnnIndex delete scaladoc): a takedown pass (vec_id%7=3,
-    // the same entity split as the text arm) publishes ONE tombstone
-    // segment — the deleted ids + their geometry partials NEGATED
-    // (cost ∝ batch: one id-filtered assignment under the frozen
-    // stored quantizer; nothing standing is read). Serving masks the
-    // head's postings with a broadcast anti-join and ranks probes
-    // against the SUBTRACTED geometry (head partials + negated
-    // partials fold to exactly the survivors' one-pass means; a cell
-    // the delete empties disappears, never a 0/0 row). Quantizer and
-    // codebooks are NOT retrained — deletes mask, compaction
-    // reclaims, resizing stays q314's measured decision. The oracle
-    // restricts the frozen chain's corpus side (candidates,
-    // own-cells, probe geometry) to the survivors.
-    "q316_ann_delete_serve" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val surv = graft.ops.AnnIndex.postingsAfterDelete(s, dir, k = k)
-      val codes = surv.select(
-        (Seq(col("vec_id"), col("cell")) ++
-          graft.ops.AnnIndex.codeCols(4)): _*)
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(surv.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentsAfterDelete(s, dir, k = k),
-          graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-          k = 5, probes = probes)
-        .select(col("q_id"), col("c_id"), col("rk"))
-        .orderBy("q_id", "rk")
-    }),
-
-
-    // ANN — delete COMPACTION (the reclaim step): the surviving
-    // postings physically rewritten into one fresh snapshot, then the
-    // SAME serving as q316 — bound to q316's oracle string (one
-    // contract, two layouts). With q293/q299/q302/q311/q313 the ANN
-    // index now closes build → append → serve → delete → compact
-    // under oracle gates, matching the text side's lifecycle.
-    "q318_ann_delete_compact" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val compacted = graft.ops.AnnIndex
-        .compactedPostingsAfterDelete(s, dir, k = k)
-      val codes = compacted.select(
-        (Seq(col("vec_id"), col("cell")) ++
-          graft.ops.AnnIndex.codeCols(4)): _*)
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(compacted.select(col("vec_id"), col("cell")),
-          Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentsAfterDelete(s, dir, k = k),
-          graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-          k = 5, probes = probes)
-        .select(col("q_id"), col("c_id"), col("rk"))
-        .orderBy("q_id", "rk")
-    }),
-
-
     // ANN+lex — the COMPACTION-POLICY decision (r17; r16 verdict ask
-    // #4: q317/q318 compact on demand, nothing decides WHEN — the
-    // q314 decision-as-measurement pattern applied to compaction).
+    // #4: compaction ran on demand, nothing decided WHEN — the
+    // retrain decision-as-measurement pattern applied to compaction).
     // One row per (side, chain state), every input a STORE read
     // (LexIndex.chainStats / AnnIndex.chainStats: segment count from
     // the published roots, live entities from the masked head /
@@ -1354,7 +1236,8 @@ private[graft] object Reg6MonitorAnn {
     // twin): the measured policy row routes each tombstoned chain's
     // head to the layout it chose — "md" compacts (share ≥ 1/8, the
     // reclaim executed), "m3" keeps serving through the mask. Rows
-    // are layout-invariant (q318's contract); the oracle pins WHICH
+    // are layout-invariant (AnnIndex.compactedHeadPostings); the
+    // oracle pins WHICH
     // layout served via the replayed policy flag.
     "q327_ann_compaction_execute" -> ((s, dir) => {
       val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
@@ -1478,27 +1361,6 @@ private[graft] object Reg6MonitorAnn {
               k = k, chain = "md"))),
           lexStore = Some(mdLex), probes = probes)
         .orderBy("q_id", "rk")
-    }),
-
-
-    "q302_ann_index_compact" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val compacted = graft.ops.AnnIndex.compactedPostings(s, dir,
-        k = k)
-      val codes = compacted.select(
-        (Seq(col("vec_id"), col("cell")) ++
-          graft.ops.AnnIndex.codeCols(4)): _*)
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(compacted.select(col("vec_id"), col("cell")),
-          Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentroids(s, dir, tag = "base",
-            k = k),
-          graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-          k = 5, probes = probes)
-        .select(col("q_id"), col("c_id"), col("rk"))
-        .orderBy("q_id", "rk")
     })
   )
 
@@ -1572,15 +1434,8 @@ private[graft] object Reg6MonitorAnn {
 
 
       // average ranks from per-group value-domain cumsums, carried as
-      // exact doubled integers; Pearson closed form on decimal sums.
-      // ONE string for BOTH Spearman engines (q209 windowed, q230
-      // domain-reduced) — divergence impossible, the CC-family pattern
-      "q209_spearman" -> spearmanSql,
-
-
-      "q230_spearman_domain" -> spearmanSql,
-
-
+      // exact doubled integers; Pearson closed form on decimal sums —
+      // whichever engine the router picks must match it
       "q233_spearman_auto" -> spearmanSql,
 
       // the streaming twins bind the BATCH oracles verbatim — one
@@ -3050,27 +2905,6 @@ private[graft] object Reg6MonitorAnn {
       // means, then the q254-shape ADC ranking at probes = 2, top 5
       "q299_ann_index_serve" -> annServeOracleSql,
 
-      // the SAME string: serving from the compacted snapshot must
-      // equal serving from the version history — one contract, two
-      // physical layouts
-      "q302_ann_index_compact" -> annServeOracleSql,
-
-      // the as-of-v0 contract: the identical frozen serving chain
-      // with the corpus side (candidates, own-cells, probe geometry)
-      // restricted to the standing slice — what version 0 physically
-      // stores
-      "q311_ann_asof_serve" ->
-        s"""WITH ${kmeansFrozenCte("NOT (vec_id % 5 = 0)",
-             annSizedKSql)},
-           |afv AS MATERIALIZED (SELECT a.vec_id, e.v, a.cell
-           |  FROM af a JOIN e ON e.vec_id = a.vec_id
-           |  WHERE NOT (a.vec_id % 5 = 0)),
-           |${pqChainsSql(4, 8, 16, 2,
-             trainWhere = "NOT (vec_id % 5 = 0)")},
-           |${hybridDenseAdcCteOver("afv", 5, annSizedProbesSql)}
-           |SELECT q_id, c_id, rk_emb AS rk FROM dena
-           |ORDER BY q_id, rk""".stripMargin,
-
       // the MID-CHAIN contract: the identical frozen serving chain
       // with the corpus side (candidates, own-cells, probe geometry)
       // restricted to standing ∪ the first ingest batch — exactly
@@ -3088,14 +2922,6 @@ private[graft] object Reg6MonitorAnn {
            |SELECT q_id, c_id, rk_emb AS rk FROM dena
            |ORDER BY q_id, rk""".stripMargin,
 
-      // the post-delete contract: the identical frozen chain (the
-      // quantizer/codebooks train on the PRE-delete standing slice —
-      // frozen means frozen; a delete masks, it never retrains) with
-      // the corpus side restricted to the survivors. ONE string for
-      // the masked fold (q316) and the compacted survivors (q318).
-      "q316_ann_delete_serve" -> annDeleteOracleSql,
-      "q318_ann_delete_compact" -> annDeleteOracleSql,
-
       // the compaction-policy replay: live/tombstone counts from the
       // corpus predicates, chain topologies as contract constants,
       // integer share arithmetic, and the two-arm rule
@@ -3104,7 +2930,7 @@ private[graft] object Reg6MonitorAnn {
       // the compaction-EXECUTE contract (q326's dense twin): the
       // policy rule replayed per chain picks the layout label; the
       // serve rows are the frozen chain scoped to each tombstoned
-      // head's survivors (layout-invariant by q318's contract)
+      // head's survivors (layout-invariant by the compaction contract)
       "q327_ann_compaction_execute" -> {
         val mdRule = "((SELECT COUNT(*) FROM embeddings WHERE " +
           "vec_id % 7 = 3) * 1000000) // " +
@@ -3209,7 +3035,7 @@ private[graft] object Reg6MonitorAnn {
 
       // q287's fusion tail over the FROZEN-trained arms: the lexical
       // CTE is the full-corpus BM25 chain (merge ≡ build(all) is
-      // q292's property-tested contract, so the merged frames replay
+      // LexIndex.merge's property-tested contract, so the merged frames replay
       // as one chain), the dense arm retrains the frozen base
       // quantizer + codebooks from scratch — one fusion, maintained
       // engines vs from-scratch oracle
@@ -3226,7 +3052,7 @@ private[graft] object Reg6MonitorAnn {
            |FROM ra ORDER BY q_id, rk""".stripMargin
   )
 
-  /** The sized-serving derivations (q299/q300/q302): the seed budget
+  /** The sized-serving derivations (q299/q300): the seed budget
     * is ⌈√n⌉ over the WHOLE indexed corpus (the per-cell candidate
     * bound n/k is about what the index serves, not what it trained
     * on), and the probe budget is max(2, ⌈k/4⌉) derived from the
@@ -3272,6 +3098,10 @@ private[graft] object Reg6MonitorAnn {
        |FROM c ORDER BY side, chain""".stripMargin
   }
 
+  // the post-delete serving contract: the frozen chain (quantizer and
+  // codebooks train on the PRE-delete standing slice — a delete
+  // masks, it never retrains) with the corpus side (candidates,
+  // own-cells, probe geometry) restricted to the survivors.
   // private[registry]: q331's epoch-takedown oracle (Reg3) embeds
   // this as its KEEP branch — the standing epoch's takedown IS the
   // md chain's head serve; one contract, shared string
@@ -3286,9 +3116,7 @@ private[graft] object Reg6MonitorAnn {
        |SELECT q_id, c_id, rk_emb AS rk FROM dena
        |ORDER BY q_id, rk""".stripMargin
 
-  // private[registry]: q321's retrain-execute oracle (Reg3) embeds
-  // this as its KEEP branch — one serving contract, shared string
-  private[registry] val annServeOracleSql: String =
+  private val annServeOracleSql: String =
     s"""WITH ${kmeansFrozenCte("NOT (vec_id % 5 = 0)", annSizedKSql)},
        |afv AS MATERIALIZED (SELECT a.vec_id, e.v, a.cell
        |  FROM af a JOIN e ON e.vec_id = a.vec_id),

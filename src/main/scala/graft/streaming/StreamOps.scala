@@ -401,11 +401,12 @@ object StreamOps {
       }
       .start()
 
-  /** The [[runUpsertSinkGate]] bridge for the partitioned sink: same
-    * duplicated staging (every row arrives twice across micro-batch
-    * boundaries), same exactly-once contract on the target — the
-    * partition column is engine-internal and dropped before the gate's
-    * projection.
+  /** The oracle-gate bridge for the partitioned upsert-ignore sink:
+    * the DUPLICATED staging ([[stageEventsDuplicated]] — every row
+    * arrives twice, across micro-batch boundaries) replayed into a
+    * fresh target + checkpoint, which must hold every fixture row
+    * exactly ONCE for the batch oracle to match — the partition column
+    * is engine-internal and dropped before the gate's projection.
     */
   def runUpsertSinkGatePartitioned(spark: SparkSession, sfDir: String,
                                    nFiles: Int, statePartitions: Int,
@@ -678,29 +679,6 @@ object StreamOps {
       stage
     })
 
-  /** The oracle-gate bridge for [[streamingPsiMonitor]]: day-bucket
-    * staging (deterministic per-batch membership), the FULL fixture as
-    * the baseline, one monitor row per micro-batch appended to a fresh
-    * parquet log; returns the log. batch_id = bucket index (AvailableNow
-    * with maxFilesPerTrigger = 1 assigns batch ids in the forced mtime
-    * order, starting at 0 on a fresh checkpoint).
-    */
-  def runPsiMonitorGate(spark: SparkSession, sfDir: String,
-                        nBuckets: Int, statePartitions: Int)
-      : DataFrame = {
-    val stage = stageEventsByDayBucket(spark, sfDir, nBuckets)
-    val ns = spark.newSession()
-    ns.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val outDir = graft.TempDirs.register(java.nio.file.Files
-      .createTempDirectory("graft-psi-log").toString) + "/log"
-    val ckpt = graft.TempDirs.register(java.nio.file.Files
-      .createTempDirectory("graft-psi-ck").toString)
-    val q = streamingPsiMonitor(eventsStream(ns, stage),
-      graft.Tables.load(ns, sfDir, "events"), outDir, ckpt)
-    try q.processAllAvailable() finally q.stop()
-    ns.read.parquet(outDir)
-  }
-
   /** Stage the events fixture into `nFiles` parquet files in a temp dir
     * — the multi-file arrival [[eventsStream]]'s maxFilesPerTrigger=1
     * then replays as nFiles separate micro-batches, so a streaming
@@ -849,37 +827,6 @@ object StreamOps {
     runToAppendTable(build(eventsStream(ns, stage)))
   }
 
-  /** [[runBoundedGate]] with the plain (unordered) staging and an
-    * append-mode sink — for engines whose output is order-invariant
-    * under an unbounded lateness declaration ([[streamingDedup]] on a
-    * key projection).
-    */
-  def runBoundedGateAppend(spark: SparkSession, sfDir: String,
-                           nFiles: Int, statePartitions: Int)
-                          (build: DataFrame => DataFrame): DataFrame = {
-    val stage = stageEvents(spark, sfDir, nFiles)
-    val ns = spark.newSession()
-    ns.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    runToAppendTable(build(eventsStream(ns, stage)))
-  }
-
-  /** Two-stream variant of [[runBoundedGateAppend]]: `build` receives
-    * two INDEPENDENT streams over the same staged files (each with its
-    * own file-source progress — micro-batches pair arbitrarily between
-    * the sides, which is exactly the state-retention stress a
-    * stream-stream join gate wants).
-    */
-  def runBoundedGateAppend2(spark: SparkSession, sfDir: String,
-                            nFiles: Int, statePartitions: Int)
-                           (build: (DataFrame, DataFrame) => DataFrame)
-      : DataFrame = {
-    val stage = stageEvents(spark, sfDir, nFiles)
-    val ns = spark.newSession()
-    ns.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    runToAppendTable(
-      build(eventsStream(ns, stage), eventsStream(ns, stage)))
-  }
-
   /** Stage the events fixture as `nFiles` files and then a SECOND copy
     * of each (mtimes ascending: originals first, copies after) — the
     * replay delivers every row TWICE, in two different micro-batches.
@@ -903,31 +850,6 @@ object StreamOps {
       }
       stage
     })
-
-  /** The oracle-gate bridge for [[upsertIgnoreSink]]: replay the
-    * DUPLICATED staging (every row arrives twice, across micro-batch
-    * boundaries) through the foreachBatch upsert-ignore parquet sink,
-    * then return the target — which must hold every fixture row exactly
-    * ONCE for the batch oracle to match. Target + checkpoint are fresh
-    * per call (the sink's idempotence is the thing under test; a reused
-    * target would hide a duplicate-append bug behind the previous run's
-    * keys).
-    */
-  def runUpsertSinkGate(spark: SparkSession, sfDir: String, nFiles: Int,
-                        statePartitions: Int,
-                        keys: Seq[String] = Seq("event_id"))
-      : DataFrame = {
-    val stage = stageEventsDuplicated(spark, sfDir, nFiles)
-    val ns = spark.newSession()
-    ns.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val target = graft.TempDirs.register(java.nio.file.Files
-      .createTempDirectory("graft-upsert-target").toString) + "/t"
-    val ckpt = graft.TempDirs.register(java.nio.file.Files
-      .createTempDirectory("graft-upsert-ckpt").toString)
-    val q = upsertIgnoreSink(eventsStream(ns, stage), keys, target, ckpt)
-    try q.processAllAvailable() finally q.stop()
-    ns.read.parquet(target)
-  }
 
   /** Stage the events fixture RESPREAD over a `spanDays`-day span with
     * MONTH-batched arrival, duplicated — the arrival shape where
@@ -1176,58 +1098,6 @@ object StreamOps {
     labels.join(sizes, Seq("component"))
       .select(col("doc_id"), col("component"), col("n_members"),
         (col("doc_id") === col("component")).as("is_survivor"))
-  }
-
-  /** The oracle-gate bridge for the incremental-CC STORE: replay the
-    * documents fixture as `nFiles` micro-batches straight through
-    * [[incrementalCCBatch]] (no admission filter — every doc folds in,
-    * so the standing labels must equal batch CC over the WHOLE fixture,
-    * i.e. the q128/q130/q140 oracle string: one oracle, FOUR engines),
-    * then return the final committed label frame with the q128
-    * member-count/survivor projection. Store + checkpoint are fresh per
-    * call — the versioned fold is the thing under test.
-    */
-  def runCCStoreGate(spark: SparkSession, sfDir: String, nFiles: Int,
-                     statePartitions: Int, k: Int = 8, bands: Int = 4,
-                     minJaccard: Double = 0.2): DataFrame = {
-    val stage = stageDocs(spark, sfDir, nFiles)
-    val ns = spark.newSession()
-    ns.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val store = graft.TempDirs.register(java.nio.file.Files
-      .createTempDirectory("graft-ccstore").toString)
-    val ckpt = graft.TempDirs.register(java.nio.file.Files
-      .createTempDirectory("graft-ccstore-ck").toString)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = ns.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(incrementalCCBatch(store, "text", k, bands,
-        minJaccard) _)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    ccLabelFrame(standingCCLabels(ns, store))
-  }
-
-  /** Two-stream variant of [[runOrderedGateAppend]] — ordered staging +
-    * flush sentinels on BOTH sides, for outer stream-stream joins whose
-    * null-padded rows only emit once the watermark PROVES no partner
-    * can arrive.
-    */
-  def runOrderedGateAppend2(spark: SparkSession, sfDir: String,
-                            nFiles: Int, statePartitions: Int,
-                            sentinels: Int = 2)
-                           (build: (DataFrame, DataFrame) => DataFrame)
-      : DataFrame = {
-    val stage = stageEventsOrdered(spark, sfDir, nFiles, sentinels)
-    val ns = spark.newSession()
-    ns.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    runToAppendTable(
-      build(eventsStream(ns, stage), eventsStream(ns, stage)))
   }
 
   // ======== round-12: gate-FAMILY consolidation ========================
@@ -1585,9 +1455,10 @@ object StreamOps {
     * serves q176's queries from the head masked by the UNION of all
     * committed tombstones, with df/stats = head cum − Σ streamed
     * negatives (exact integer fold, the [[graft.ops.LexIndex]]
-    * delete algebra) — bound to q315's oracle string (the surviving
-    * corpus), so batch and streaming takedown are provably ONE
-    * maintenance operator, like q280≡q282 and q305≡q309 before it.
+    * delete algebra) — bound to the surviving-corpus BM25 string
+    * (q326's md arm serves the batch twin), so batch and streaming
+    * takedown are provably ONE maintenance operator, like q280≡q282
+    * and q305≡q309 before it.
     */
   private def lexDeleteGate(ns: SparkSession, sfDir: String): Gate = {
     val dels3 = stageDocsDeletes(ns, sfDir, 3)

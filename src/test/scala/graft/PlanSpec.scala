@@ -172,7 +172,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q29 computes both percentiles in ONE aggregation buffer") {
-    val p = plan("q29_quantiles")
+    // the buffer engine q273's router picks for modest groups
+    val p = graft.ops.Agg.quantilesByBuffer(
+        Tables.load(spark, dir, "lineitem"), "l_returnflag",
+        "l_extendedprice", Seq("p50" -> 0.5, "p90" -> 0.9))
+      .orderBy("l_returnflag").queryExecution.executedPlan.toString
     assert("percentile\\(".r.findAllIn(p).size <= 2,  // partial+final of one agg
       "two separate percentile buffers:\n" + p.take(1200))
   }
@@ -591,11 +595,36 @@ class PlanSpec extends SparkSpec {
   test("q209 spearman is JOIN-FREE: both rank windows share one hash " +
       "exchange on the group key (the round-8 shape joined the raw " +
       "frame against two row-sized rank tables)") {
-    val p = plan("q209_spearman")
+    // the windowed engine q233's router picks on lineitem
+    val p = graft.ops.Agg.spearmanCorr(Tables.load(spark, dir, "lineitem"),
+        "l_returnflag", "l_quantity", "l_extendedprice")
+      .orderBy("l_returnflag").queryExecution.executedPlan.toString
     assert(!p.contains("Join"), p.take(1500))
     assert("Exchange hashpartitioning".r.findAllIn(p).size === 1,
       p.take(1500))
     assert("Window \\[".r.findAllIn(p).size === 2, p.take(1500))
+  }
+
+  test("q247 retrieval metrics: no broadcast hint on the PRESERVED " +
+      "side of an outer join (Spark cannot build that side, ignores " +
+      "the hint and logs a HintErrorLogger warning)") {
+    import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter,
+      RightOuter}
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST,
+      HintInfo, Join}
+    val opt = SparkEntry.queries("q247_retrieval_metrics")(spark, dir)
+      .queryExecution.optimizedPlan
+    def bc(h: Option[HintInfo]) = h.exists(_.strategy.contains(BROADCAST))
+    val joins = opt.collect { case j: Join => j }
+    assert(joins.exists(_.joinType == LeftOuter), opt.treeString.take(1500))
+    val ignored = joins.filter(j => j.joinType match {
+      case LeftOuter => bc(j.hint.leftHint)
+      case RightOuter => bc(j.hint.rightHint)
+      case FullOuter => bc(j.hint.leftHint) || bc(j.hint.rightHint)
+      case _ => false
+    })
+    assert(ignored.isEmpty, "broadcast hint on a preserved side:\n" +
+      ignored.map(_.simpleString(200)).mkString("\n"))
   }
 
   test("q224 phrase postings: phrase ranking is a vocab-sized agg + " +

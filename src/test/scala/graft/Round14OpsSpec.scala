@@ -294,14 +294,24 @@ class Round14OpsSpec extends SparkSpec {
   test("q302 compaction is serving-invariant: the compacted snapshot " +
       "serves identically to the version-history head, holds the " +
       "identical row set, and collapses the layout to one file") {
-    val served = SparkEntry.queries("q302_ann_index_compact")(
-      spark, dir).collect().toSeq
+    // q299's top-5 serve, run over the default chain's compacted head
+    val (k, probes) = ops.AnnIndex.sizedParams(spark, dir)
+    val compacted = ops.AnnIndex.compactedHeadPostings(spark, dir, k = k)
+    val served = ops.Sim.topKIvfAdcCoded(
+        Tables.load(spark, dir, "embeddings").where(col("vec_id") < 10)
+          .join(compacted.select(col("vec_id"), col("cell")),
+            Seq("vec_id")),
+        compacted.select((Seq(col("vec_id"), col("cell")) ++
+          ops.AnnIndex.codeCols(4)): _*),
+        ops.AnnIndex.probeCentroids(spark, dir, tag = "base", k = k),
+        ops.AnnIndex.books(spark, dir, tag = "base", k = k),
+        k = 5, probes = probes)
+      .select(col("q_id"), col("c_id"), col("rk"))
+      .orderBy("q_id", "rk").collect().toSeq
     val head = SparkEntry.queries("q299_ann_index_serve")(
       spark, dir).collect().toSeq
     assert(served.nonEmpty && served === head,
       "compaction must not change what the index serves")
-    val (k, _) = ops.AnnIndex.sizedParams(spark, dir)
-    val compacted = ops.AnnIndex.compactedPostings(spark, dir, k = k)
     val headRows = ops.AnnIndex.postingsAsOf(spark, dir, version = 1L,
       k = k)
     assert(compacted.exceptAll(headRows).count() === 0L &&

@@ -55,8 +55,12 @@ class Round15OpsSpec extends SparkSpec {
       "coverage on the fixture") {
     val stored = SparkEntry.queries("q304_sized_store_recall")(
       spark, dir).collect().toSeq
-    val inMem = SparkEntry.queries("q296_coverage_matched_recall")(
-      spark, dir).collect().toSeq
+    // the same measurement with the in-memory quantizer assignment
+    val inMem = ops.Curate.semanticDeconRecallCoverage(
+        Tables.load(spark, dir, "embeddings"),
+        isEval = col("vec_id") % 97 === 0, threshold = 0.25,
+        fracs = Seq(0.125, 0.25), cacheKey = Some(dir))
+      .orderBy("policy", "coverage").collect().toSeq
     assert(stored.nonEmpty && stored === inMem,
       "the physical store's postings must reproduce the in-memory " +
         "quantizer's measurement exactly")
@@ -96,9 +100,9 @@ class Round15OpsSpec extends SparkSpec {
     same(head._2, full._2, "dl")
     same(head._3, full._3, "df")
     same(head._4, full._4, "stats")
-    // compaction: serving-invariant (q306 binds the oracle; here the
-    // frames themselves) and single-file side frames
-    val c = ops.LexIndex.compactedFrames(spark, dir)
+    // compaction: serving-invariant (q326's compacted arm binds an
+    // oracle; here the frames themselves) and single-file side frames
+    val c = ops.LexIndex.compactedHeadFrames(spark, dir)
     same(c._1.drop("tbkt"), full._1, "compacted tf")
     same(c._3, full._3, "compacted df")
     assert(c._2.inputFiles.length === 1 &&
@@ -192,11 +196,12 @@ class Round15OpsSpec extends SparkSpec {
       "appears as query or candidate, and v0's probe geometry " +
       "summarizes ONLY the standing postings (it differs from the " +
       "head's whole-corpus geometry)") {
-    val rows = SparkEntry.queries("q311_ann_asof_serve")(spark, dir)
-      .collect().toSeq
+    // q323's version-0 arm: (version, q_id, c_id, rk)
+    val rows = SparkEntry.queries("q323_ann_mixed_asof")(spark, dir)
+      .where(col("version") === 0L).collect().toSeq
     assert(rows.nonEmpty)
     rows.foreach { r =>
-      assert(r.getLong(0) % 5 != 0 && r.getLong(1) % 5 != 0,
+      assert(r.getLong(1) % 5 != 0 && r.getLong(2) % 5 != 0,
         s"pre-append serving must never see a delta vector: $r")
     }
     val (k, _) = ops.AnnIndex.sizedParams(spark, dir)
@@ -217,10 +222,20 @@ class Round15OpsSpec extends SparkSpec {
       "q305 (segment fold), q306 (compacted), and q310 (as-of v0) " +
       "plans read only index stores — zero corpus tokenization at " +
       "query time") {
-    Seq("q305_bm25_index_serve", "q306_bm25_index_compact",
-        "q310_lex_asof_serve").foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, dir)
-        .queryExecution.executedPlan.toString
+    import spark.implicits._
+    // the compacted default-chain head, served as q305 serves the fold
+    val c = ops.LexIndex.compactedHeadFrames(spark, dir)
+    val compacted = ops.Text.bm25RetrieveStored(
+      Seq(("kw_cust", "customer order value"),
+        ("kw_join", "join merge hash"),
+        ("kw_scan", "spark scan filter"),
+        ("kw_win", "window batch sort")).toDF("query_id", "query_text"),
+      c._1, c._2, c._3, c._4, k = 5)
+    // q322 serves every version of the m3 chain, v0 included
+    (Seq("q305_bm25_index_serve", "q322_lex_mixed_asof").map(name =>
+        name -> SparkEntry.queries(name)(spark, dir)) :+
+      ("compacted head" -> compacted)).foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("documents.parquet"),
         s"$name must serve from stores only, but its plan scans the " +
           "corpus")

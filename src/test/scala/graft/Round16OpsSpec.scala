@@ -128,7 +128,8 @@ class Round16OpsSpec extends SparkSpec {
       "split, the budgets are the matched-coverage arithmetic, " +
       "recalls are valid, and the emitted decision IS the rule " +
       "applied to the measured row") {
-    val r = SparkEntry.queries("q314_ann_retrain_decision")(spark, dir)
+    // the decision q331 executes, read off the maintained head
+    val r = graft.registry.Reg3Curation.headRetrainDecision(spark, dir)
       .collect()
     assert(r.length === 1)
     val row = r(0)
@@ -173,15 +174,21 @@ class Round16OpsSpec extends SparkSpec {
       "dfafter must equal the survivors' df, zero-df terms dropped")
     assert(f._4.collect().toSeq === survivors._4.collect().toSeq,
       "statsafter must equal the survivors' stats")
-    // serving never surfaces a deleted entity, on either arm
-    SparkEntry.queries("q315_lex_delete_serve")(spark, dir)
-      .collect().foreach(r => assert(r.getLong(1) % 7 != 3,
-        s"lex serving surfaced a deleted doc: $r"))
-    SparkEntry.queries("q316_ann_delete_serve")(spark, dir)
-      .collect().foreach { r =>
-        assert(r.getLong(0) % 7 != 3 && r.getLong(1) % 7 != 3,
-          s"ANN serving surfaced a deleted vector: $r")
-      }
+    // serving never surfaces a deleted entity, on either arm: the md
+    // chain's tombstoned head as q326/q327 serve it — (chain, layout,
+    // query_id, doc_id, ...) and (chain, layout, q_id, c_id, rk)
+    val lexMd = SparkEntry.queries("q326_lex_compaction_execute")(
+      spark, dir).where(col("chain") === "md").collect()
+    assert(lexMd.nonEmpty)
+    lexMd.foreach(r => assert(r.getLong(3) % 7 != 3,
+      s"lex serving surfaced a deleted doc: $r"))
+    val annMd = SparkEntry.queries("q327_ann_compaction_execute")(
+      spark, dir).where(col("chain") === "md").collect()
+    assert(annMd.nonEmpty)
+    annMd.foreach { r =>
+      assert(r.getLong(2) % 7 != 3 && r.getLong(3) % 7 != 3,
+        s"ANN serving surfaced a deleted vector: $r")
+    }
   }
 
   test("ANN geometry-after-delete is the survivors' one-pass " +
@@ -189,7 +196,9 @@ class Round16OpsSpec extends SparkSpec {
       "masked and compacted layouts serve identical rows, and a " +
       "fully-emptied cell disappears instead of dividing by zero") {
     val (k, _) = ops.AnnIndex.sizedParams(spark, dir)
-    val after = ops.AnnIndex.probeCentsAfterDelete(spark, dir, k = k)
+    // the "md" chain's head (v2) is the state after the tombstone delete
+    val after = ops.AnnIndex.probeCentsAsOf(spark, dir, 2L, k = k,
+      chain = "md")
     val onePass = ops.Sim.cellCentroids(
       ops.AnnIndex.postingsAsOf(spark, dir, 1L, k = k)
         .where(!ops.AnnIndex.deleteSplit)
@@ -197,9 +206,10 @@ class Round16OpsSpec extends SparkSpec {
         .select(col("cell"), col("embedding")), "cell")
     assert(after.exceptAll(onePass).count() === 0L &&
       onePass.exceptAll(after).count() === 0L)
-    val masked = ops.AnnIndex.postingsAfterDelete(spark, dir, k = k)
+    val masked = ops.AnnIndex.postingsAsOf(spark, dir, 2L, k = k,
+      chain = "md")
     val compacted = ops.AnnIndex
-      .compactedPostingsAfterDelete(spark, dir, k = k)
+      .compactedHeadPostings(spark, dir, k = k, chain = "md")
     assert(masked.exceptAll(compacted).count() === 0L &&
       compacted.exceptAll(masked).count() === 0L,
       "compaction must carry exactly the surviving rows")
@@ -262,8 +272,9 @@ class Round16OpsSpec extends SparkSpec {
       "table: q312 (mid-chain), q315 (masked delete serve), and q317 " +
       "(delete compaction) plans read only index stores — the r15 " +
       "no-corpus-scan pin extended to the round-16 engines") {
-    Seq("q312_lex_midchain_serve", "q315_lex_delete_serve",
-        "q317_lex_delete_compact").foreach { name =>
+    // q326 serves the md head compacted and the m3 head masked
+    Seq("q312_lex_midchain_serve",
+        "q326_lex_compaction_execute").foreach { name =>
       val plan = SparkEntry.queries(name)(spark, dir)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("documents.parquet"),

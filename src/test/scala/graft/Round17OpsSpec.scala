@@ -178,9 +178,12 @@ class Round17OpsSpec extends SparkSpec {
     // snapshot the pre-rotation v0 read (the standing segment)
     val v0Before = ops.AnnIndex.postingsAsOf(spark, dir, 0L, k = k)
       .collect().toSet
-    val dec = SparkEntry.queries("q314_ann_retrain_decision")(
-      spark, dir).collect()(0)
-    val served = SparkEntry.queries("q321_ann_retrain_execute")(
+    // q331 runs this decision, executes it through
+    // AnnIndex.rotateIfRetrain, and tags every served row with the
+    // branch and epoch it served from
+    val dec = graft.registry.Reg3Curation.headRetrainDecision(spark, dir)
+      .collect()(0)
+    val served = SparkEntry.queries("q331_epoch_takedown_serve")(
       spark, dir).collect().toSeq
     assert(served.nonEmpty)
     val branch = served.head.getString(0)
@@ -453,7 +456,8 @@ class Round17OpsSpec extends SparkSpec {
       "post-delete df must equal the survivors' df")
     assert(f._4.collect().toSeq === scratch._4.collect().toSeq)
     val (k, _) = ops.AnnIndex.sizedParams(spark, dir)
-    val masked = ops.AnnIndex.postingsAfterDelete(spark, dir, k = k)
+    val masked = ops.AnnIndex.postingsAsOf(spark, dir, 2L, k = k,
+        chain = "md")
       .select("vec_id")
     val want = Tables.load(spark, dir, "embeddings")
       .where(!ops.AnnIndex.deleteSplit).select("vec_id")
