@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   *
   * Sizing: the parameter DEFAULTS (k = 8 cells, m = 4 codes) are the
   * measurement/parity configuration — the frozen-append summary
-  * contract q280≡q282≡q293 pins its oracle to the 0..7 cell grid, and
+  * contract q280≡q293 pins its oracle to the 0..7 cell grid, and
   * the q294 sweep replays the 8-seed kmeans chain — but serving
   * consumers must NOT run the fixed k: q290/q304 measure fixed-k
   * recall degrading with corpus size, so q299/q300 size the
@@ -59,8 +59,6 @@ import org.apache.spark.sql.functions._
   * to buy the residual recall back without widening the codes.
   */
 object AnnIndex {
-
-  private def slug(dir: String): String = StoreCommit.slug(dir)
 
   /** The measured corpus-sizing policy for the coarse quantizer —
     * (k cells, probe budget) for an n-vector corpus: k = ⌈√n⌉ keeps
@@ -111,57 +109,44 @@ object AnnIndex {
     * read as current (the path is the cache key). */
   private val V = "v2"
 
+  /** The quantizer/codebook parameters every ANN store root names. */
+  private def params(k: Int, iters: Int, m: Int, codes: Int): String =
+    s"-c$k-i$iters-m$m-k$codes"
+
   /** Stable store root for fixture `dir`; `tag` names the train
-    * filter ("full" = whole-corpus quantizer, "base" = the q280/q282
-    * frozen base slice). The root carries a CONTENT fingerprint of
-    * the fixture ([[StoreCommit.fingerprint]]) as well as its path,
-    * so regenerated test data at the same path rebuilds instead of
-    * silently serving a stale index (r13 advice). */
+    * filter ("full" = whole-corpus quantizer, "base" = the q280
+    * frozen base slice). [[StoreCommit.root]] carries a CONTENT
+    * fingerprint of the fixture as well as its path, so regenerated
+    * test data at the same path rebuilds instead of silently serving
+    * a stale index (r13 advice). */
   def root(dir: String, tag: String, k: Int, iters: Int, m: Int,
            codes: Int): String =
-    sys.props("java.io.tmpdir") +
-      s"/graft-annindex-$V-${slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}-$tag-c$k-i$iters-m$m-k$codes"
+    StoreCommit.root("annindex", V, dir,
+      s"-$tag${params(k, iters, m, codes)}")
 
   private val readMemo = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.CompletableFuture[AnyRef]]
 
-  /** The whole-corpus ("full") quantizer store for fixture `dir` —
-    * trained exactly as kmeansCellsCached/pqCodebooksCached train for
-    * the IVF/ADC query family (SAME memo keys, so one training serves
-    * both the queries and the publish). */
-  private def ensureFull(spark: SparkSession, dir: String, k: Int,
-                         iters: Int, m: Int, codes: Int): String =
-    ensure(spark, dir, "full", None, dir, k, iters, m, codes)
-
-  /** The q280/q282 frozen-BASE quantizer store: trained on the
-    * standing slice only ([[Sim.frozenDeltaSplit]]'s complement, the
-    * [[Sim.frozenBaseKey]] memo), postings = the WHOLE corpus assigned
-    * under those frozen centroids. */
-  private def ensureBase(spark: SparkSession, dir: String, k: Int,
-                         iters: Int, m: Int, codes: Int): String =
-    ensure(spark, dir, "base", Some(!Sim.frozenDeltaSplit),
-      Sim.frozenBaseKey(dir), k, iters, m, codes)
-
-  private val ensureMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]
-
-  private def ensure(spark: SparkSession, dir: String, tag: String,
-                     trainFilter: Option[Column], memoKey: String,
-                     k: Int, iters: Int, m: Int, codes: Int): String =
-    // single-flight per target within the JVM: Verify runs queries
-    // concurrently, and two threads building into the same pid-keyed
-    // staging dir corrupt each other mid-write (cross-JVM races are
-    // handled by the ATOMIC_MOVE publish below); the build runs
-    // outside any map bin lock (StoreCommit.singleFlight, r15 advice)
-    StoreCommit.singleFlight(ensureMemo,
-      root(dir, tag, k, iters, m, codes))(
-      build(spark, dir, tag, trainFilter, memoKey, k, iters, m, codes))
-
-  private def build(spark: SparkSession, dir: String, tag: String,
-                    trainFilter: Option[Column], memoKey: String,
-                    k: Int, iters: Int, m: Int, codes: Int): String =
-    StoreCommit.ensure(root(dir, tag, k, iters, m, codes)) { staging =>
+  /** Publish (once per corpus snapshot) and return the quantizer store
+    * for `tag`:
+    *   - "full" — the whole-corpus quantizer, trained exactly as
+    *     kmeansCellsCached/pqCodebooksCached train for the IVF/ADC
+    *     query family (SAME memo keys, so one training serves both
+    *     the queries and the publish);
+    *   - "base" — the q280 frozen-BASE quantizer, trained on the
+    *     standing slice only ([[Sim.frozenDeltaSplit]]'s complement,
+    *     the [[Sim.frozenBaseKey]] memo).
+    * Either way the postings are the WHOLE corpus assigned under the
+    * trained centroids. */
+  private def path(spark: SparkSession, dir: String, tag: String,
+                   k: Int, iters: Int, m: Int, codes: Int): String = {
+    val (trainFilter, memoKey): (Option[Column], String) = tag match {
+      case "full" => (None, dir)
+      case "base" => (Some(!Sim.frozenDeltaSplit), Sim.frozenBaseKey(dir))
+      case other => throw new IllegalArgumentException(
+        s"unknown index tag '$other' (expected full|base)")
+    }
+    StoreCommit.publish(root(dir, tag, k, iters, m, codes)) { staging =>
       val emb = graft.Tables.load(spark, dir, "embeddings")
       val trainSet = trainFilter.map(emb.where).getOrElse(emb)
       val cents = Sim.kmeansCentroidsCached(trainSet, k, iters, memoKey)
@@ -190,15 +175,7 @@ object AnnIndex {
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$staging/probecents")
     }
-
-  private def path(spark: SparkSession, dir: String, tag: String,
-                   k: Int, iters: Int, m: Int, codes: Int): String =
-    tag match {
-      case "full" => ensureFull(spark, dir, k, iters, m, codes)
-      case "base" => ensureBase(spark, dir, k, iters, m, codes)
-      case other => throw new IllegalArgumentException(
-        s"unknown index tag '$other' (expected full|base)")
-    }
+  }
 
   /** Read the stored coarse-quantizer centroids (cells ascending);
     * builds + publishes the store on first use per corpus snapshot. */
@@ -266,8 +243,8 @@ object AnnIndex {
   // the ANN side) ----------------------------------------------------
   // The snapshot store above is write-once per corpus; a REAL vector
   // index also has to FOLD an ingest batch into its standing postings
-  // without retraining or rewriting them (r13 verdict: q280/q282
-  // summarize frozen appends, but nothing folded a delta into the
+  // without retraining or rewriting them (r13 verdict: q280
+  // summarizes frozen appends, but nothing folded a delta into the
   // store). The history below is the Lucene segment model the LEX side
   // shipped in r15 ([[LexIndex.ensureAppendHistory]]), now on the ANN
   // side too (r15 verdict's one weak: the previous layout re-wrote
@@ -286,8 +263,8 @@ object AnnIndex {
   // publishes atomically via StoreCommit; history stays queryable
   // (time-travel); [[compactedHeadPostings]] collapses a chain. Bound to
   // q280's oracle string: summarizing the merged head must equal the
-  // in-memory frozen-append monitor — one contract, three engines
-  // (in-memory q280, streaming q282, stored-merge q293).
+  // in-memory frozen-append monitor — one contract, two engines
+  // (in-memory q280, stored-merge q293).
 
   /** History-format version, bumped independently of [[V]]: r16 "v4"
     * made segments DELTA-ONLY (postings hold one batch each; geometry
@@ -297,74 +274,26 @@ object AnnIndex {
     * delete segments in the chain algebra. */
   private val HV = "v5"
 
-  /** The named chains of the maintained ANN index, as segment lists
-    * ([[graft.ops.Chains]] — the [[LexIndex.chainSegs]] policy with
-    * vec_id for doc_id, so one takedown/ingest pass hits both arms of
-    * the retrieval stack on one rule):
-    *   - ""   — standing ([[Sim.frozenDeltaSplit]]'s complement),
-    *     then the delta;
-    *   - "c3" — the delta split into TWO ingest batches (mid-chain
-    *     as-of reads, r15 ask #6);
-    *   - "md" — the default chain plus a head TOMBSTONE segment
-    *     (the r16 delete lifecycle as a chain suffix — prefix
-    *     sharing reuses the whole default history's bytes);
-    *   - "m3" — append → delete → append (r17): every version an
-    *     as-of-readable, oracle-gated state; capture-time semantics
-    *     keep a post-delete append's matching vectors live.
-    * Each vector lands in exactly ONE append (the disjointness the
-    * union-fold read relies on). */
-  private def chainSegs(chain: String): Seq[Segment] = chain match {
-    case "" => Seq(Append("std", !Sim.frozenDeltaSplit),
-      Append("d", Sim.frozenDeltaSplit))
-    case "c3" => Seq(Append("std", !Sim.frozenDeltaSplit),
-      Append("d0", col("vec_id") % 10 === 0),
-      Append("d5", col("vec_id") % 10 === 5))
-    case "c4" => Seq(Append("std", !Sim.frozenDeltaSplit),
-      Append("d0", col("vec_id") % 10 === 0),
-      Append("d5a", col("vec_id") % 20 === 5),
-      Append("d5b", col("vec_id") % 20 === 15))
-    case "md" => Seq(Append("std", !Sim.frozenDeltaSplit),
-      Append("d", Sim.frozenDeltaSplit), Delete("del7", deleteSplit))
-    case "m3" => Seq(Append("std", !Sim.frozenDeltaSplit),
-      Delete("del7", deleteSplit), Append("d", Sim.frozenDeltaSplit))
-    case other => throw new IllegalArgumentException(
-      s"unknown chain '$other' (expected \"\"|c3|c4|md|m3)")
-  }
+  /** The named chains of the maintained ANN index: the shared
+    * [[Chains.catalogue]] over vec_id, so one takedown/ingest pass
+    * hits both arms of the retrieval stack on one rule. */
+  private def chainSegs(chain: String): Seq[Segment] =
+    Chains.catalogue(chain, "vec_id")
 
-  /** Measured chain statistics — the inputs of the compaction-policy
-    * decision (q324), as ONE LAZY frame (chain, n_segments, n_live,
-    * n_tomb) over `chains`: all store reads sized to METADATA, never
-    * the postings — segment count from the published roots, live
-    * members from the geometry partials' exact member counts (k·d
-    * rows per segment, one coalesced file each — Σ cnt at one
-    * position, delete segments' negated counts subtracting exactly),
-    * tombstones from the delete segments' published id files. Lazy on
-    * purpose: a policy decision over N chains must cost one Spark
-    * action over tiny files, not a postings scan (or a driver
-    * collect) per chain. */
+  /** Measured chain statistics ([[Chains.statsFrame]]): live members
+    * from the geometry partials' exact member counts (k·d rows per
+    * segment, one coalesced file each — Σ cnt at one position,
+    * delete segments' negated counts subtracting exactly), never the
+    * postings. */
   def chainStatsFrame(spark: SparkSession, dir: String,
                       chains: Seq[String], k: Int = 8, iters: Int = 2,
                       m: Int = 4, codes: Int = 8): DataFrame =
-    chains.map { ch =>
-      val roots = ensureAppendHistory(spark, dir, k, iters, m, codes,
-        ch)
-      val live = roots
-        .map(r => StoreRead.parquet(spark, s"$r/geoparts"))
+    Chains.statsFrame(spark, chains, "vec_id",
+      ensureAppendHistory(spark, dir, k, iters, m, codes, _))(roots =>
+      roots.map(r => StoreRead.parquet(spark, s"$r/geoparts"))
         .reduce(_.unionByName(_))
         .where(col("pos") === 0)
-        .agg(coalesce(sum(col("cnt")), lit(0L)).as("n_live"))
-      val delRoots = chainSegs(ch).zip(roots).collect {
-        case (Delete(_, _), r) => r }
-      val tomb =
-        if (delRoots.isEmpty) live.select(lit(0L).as("n_tomb"))
-        else delRoots.map(r => StoreRead.parquet(spark, s"$r/dels"))
-          .reduce(_.unionByName(_))
-          .agg(count(lit(1)).as("n_tomb"))
-      live.crossJoin(tomb).select(
-        lit(if (ch.isEmpty) "default" else ch).as("chain"),
-        lit(roots.length).as("n_segments"),
-        col("n_live"), col("n_tomb"))
-    }.reduce(_.unionByName(_))
+        .agg(coalesce(sum(col("cnt")), lit(0L)).as("n_live")))
 
   /** The live-corpus predicate as of `version` of `chain` — what an
     * as-of read serves (exposed for specs and decision queries). */
@@ -381,10 +310,15 @@ object AnnIndex {
   def appendVersionRoot(dir: String, version: Long, k: Int = 8,
                         iters: Int = 2, m: Int = 4,
                         codes: Int = 8, chain: String = ""): String =
-    sys.props("java.io.tmpdir") +
-      s"/graft-annidxhist-$HV-${slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}-c$k-i$iters-m$m-k$codes" +
-      s"-p${Chains.prefix(chainSegs(chain), version.toInt)}"
+    chainRoot("annidxhist", dir, k, iters, m, codes, chain, version)
+
+  /** A `kind` store over segments 0..`version` of `chain`, keyed by
+    * their segment-id prefix (history, compacted and tiered roots). */
+  private def chainRoot(kind: String, dir: String, k: Int, iters: Int,
+                        m: Int, codes: Int, chain: String,
+                        version: Long): String =
+    StoreCommit.root(kind, HV, dir, params(k, iters, m, codes) +
+      s"-p${Chains.prefix(chainSegs(chain), version.toInt)}")
 
   /** Assign + PQ-encode a batch under the STORED frozen "base"
     * quantizer — the per-ingest projection of index maintenance:
@@ -419,11 +353,8 @@ object AnnIndex {
       books(spark, dir, "base", k, iters, m, codes),
       "vec_id", "embedding", keep = Seq("cell", "sim_e9"))
 
-  private val appendMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]
-
   /** Ensure the postings-segment history for fixture `dir` and
-    * `chain` (see [[chainSegs]]): an APPEND segment holds ONLY its
+    * `chain` (see [[Chains.catalogue]]): an APPEND segment holds ONLY its
     * own batch — assigned and PQ-encoded under the frozen stored
     * "base" quantizer ([[assignUnderStored]]) — plus that batch's
     * geometry partials ([[Sim.cellCentroidPartials]]); a DELETE
@@ -441,51 +372,45 @@ object AnnIndex {
                           chain: String = ""): Seq[String] =
     Chains.effective(chainSegs(chain)).zipWithIndex
       .map { case ((seg, eff), v) =>
-        val root = appendVersionRoot(dir, v.toLong, k, iters, m, codes,
-          chain)
-        StoreCommit.singleFlight(appendMemo, root)(
-          StoreCommit.ensure(root) { staging =>
-            // ONE assignment feeds both artifacts: the postings (or
-            // tombstone ids) and the batch's geometry partials (the
-            // partials need the raw vectors the encoded postings drop)
-            val raw = assignRawUnderStored(spark, dir,
-                graft.Tables.load(spark, dir, "embeddings").where(eff),
-                k, iters, m, codes)
-              .localCheckpoint()
-            seg match {
-              case Append(_, _) =>
-                Sim.pqEncode(raw, books(spark, dir, "base", k, iters, m,
-                      codes), "vec_id", "embedding",
-                    keep = Seq("cell", "sim_e9"))
-                  .withColumn("is_delta", lit(v > 0))
-                  .write.mode("overwrite").parquet(s"$staging/postings")
-                Sim.cellCentroidPartials(raw, "cell", "embedding")
-                  .coalesce(1).write.mode("overwrite")
-                  .parquet(s"$staging/geoparts")
-              case Delete(_, _) =>
-                raw.select(col("vec_id"))
-                  .coalesce(1).write.mode("overwrite")
-                  .parquet(s"$staging/dels")
-                Sim.cellCentroidPartials(raw, "cell", "embedding")
-                  .select(col("cell"), col("pos"), (-col("s")).as("s"),
-                    (-col("cnt")).as("cnt"))
-                  .coalesce(1).write.mode("overwrite")
-                  .parquet(s"$staging/geoparts")
-            }
-          })
+        StoreCommit.publish(appendVersionRoot(dir, v.toLong, k, iters, m,
+            codes, chain)) { staging =>
+          // ONE assignment feeds both artifacts: the postings (or
+          // tombstone ids) and the batch's geometry partials (the
+          // partials need the raw vectors the encoded postings drop)
+          val raw = assignRawUnderStored(spark, dir,
+              graft.Tables.load(spark, dir, "embeddings").where(eff),
+              k, iters, m, codes)
+            .localCheckpoint()
+          seg match {
+            case Append(_, _) =>
+              Sim.pqEncode(raw, books(spark, dir, "base", k, iters, m,
+                    codes), "vec_id", "embedding",
+                  keep = Seq("cell", "sim_e9"))
+                .withColumn("is_delta", lit(v > 0))
+                .write.mode("overwrite").parquet(s"$staging/postings")
+              Sim.cellCentroidPartials(raw, "cell", "embedding")
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$staging/geoparts")
+            case Delete(_, _) =>
+              raw.select(col("vec_id"))
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$staging/dels")
+              Sim.cellCentroidPartials(raw, "cell", "embedding")
+                .select(col("cell"), col("pos"), (-col("s")).as("s"),
+                  (-col("cnt")).as("cnt"))
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$staging/geoparts")
+          }
+        }
       }
 
   private def historyRoots(spark: SparkSession, dir: String,
                            version: Long, k: Int, iters: Int, m: Int,
                            codes: Int, chain: String)
-      : Seq[(Segment, String)] = {
-    val roots = ensureAppendHistory(spark, dir, k, iters, m, codes,
-      chain)
-    require(version >= 0L && version < roots.length,
-      s"chain '$chain' holds versions 0..${roots.length - 1}" +
-        s" (0 = standing, ${roots.length - 1} = head), got $version")
-    chainSegs(chain).zip(roots).take(version.toInt + 1)
-  }
+      : Seq[(Segment, String)] =
+    Chains.asOf(chainSegs(chain),
+      ensureAppendHistory(spark, dir, k, iters, m, codes, chain),
+      chain, version)
 
   /** TIME-TRAVEL read of a version's OWN probe geometry — what as-of
     * serving must rank probes against (v0's geometry summarizes only
@@ -533,7 +458,7 @@ object AnnIndex {
 
   // ---- tombstone deletes (round 16; round 17 folds them into the
   // chain algebra above — the lex "md" chain's dense twin) --------------
-  // A delete is a SEGMENT TYPE in the chain ([[chainSegs]]): it
+  // A delete is a SEGMENT TYPE in the chain ([[Chains.catalogue]]): it
   // publishes the captured vec_ids plus the doomed members' geometry
   // partials NEGATED — decimal/integer subtraction is exact, so
   // geometry-after-delete folds to precisely the survivors' one-pass
@@ -548,10 +473,8 @@ object AnnIndex {
   // compaction reclaims, resizing stays the measured retrain decision
   // (executed, when taken, by the epoch rotation below).
 
-  /** The takedown split — vec_id % 7 === 3, mirroring
-    * [[LexIndex.deleteSplit]]'s doc policy so a takedown pass removes
-    * the same entities from both arms of the retrieval stack. */
-  val deleteSplit: Column = col("vec_id") % 7 === 3
+  /** The takedown split over vec_id ([[Chains.deleteSplit]]). */
+  val deleteSplit: Column = Chains.deleteSplit("vec_id")
 
   /** The head version of a chain (the last segment's index). */
   def headVersion(chain: String = ""): Long =
@@ -569,18 +492,13 @@ object AnnIndex {
                             k: Int = 8, iters: Int = 2, m: Int = 4,
                             codes: Int = 8,
                             chain: String = ""): DataFrame = {
-    val segs = chainSegs(chain)
-    val root = sys.props("java.io.tmpdir") +
-      s"/graft-annidxcompact-$HV-${slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}-c$k-i$iters-m$m-k$codes" +
-      s"-p${Chains.prefix(segs, segs.length - 1)}"
-    val path = StoreCommit.singleFlight(appendMemo, root)(
-      StoreCommit.ensure(root) { staging =>
-        postingsAsOf(spark, dir, headVersion(chain), k, iters, m,
-            codes, chain)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$staging/postings")
-      })
+    val path = StoreCommit.publish(chainRoot("annidxcompact", dir, k,
+        iters, m, codes, chain, headVersion(chain))) { staging =>
+      postingsAsOf(spark, dir, headVersion(chain), k, iters, m, codes,
+          chain)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$staging/postings")
+    }
     StoreRead.parquet(spark, s"$path/postings")
   }
 
@@ -608,25 +526,21 @@ object AnnIndex {
         "compactedHeadPostings (the reclaim)")
     val roots = ensureAppendHistory(spark, dir, k, iters, m, codes,
       chain)
-    val root = sys.props("java.io.tmpdir") +
-      s"/graft-annidxtier-$HV-${slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}-c$k-i$iters-m$m-k$codes" +
-      s"-p${Chains.prefix(segs, segs.length - 1)}"
-    val path = StoreCommit.singleFlight(appendMemo, root)(
-      StoreCommit.ensure(root) { staging =>
-        val tails = roots.drop(1)
-        tails.map(r => StoreRead.parquet(spark, s"$r/postings"))
-          .reduce(_.unionByName(_))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$staging/postings")
-        tails.map(r => StoreRead.parquet(spark, s"$r/geoparts"))
-          .reduce(_.unionByName(_))
-          .groupBy("cell", "pos")
-          .agg(sum(col("s")).cast("decimal(37,10)").as("s"),
-            sum(col("cnt")).as("cnt"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$staging/geoparts")
-      })
+    val path = StoreCommit.publish(chainRoot("annidxtier", dir, k,
+        iters, m, codes, chain, headVersion(chain))) { staging =>
+      val tails = roots.drop(1)
+      tails.map(r => StoreRead.parquet(spark, s"$r/postings"))
+        .reduce(_.unionByName(_))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$staging/postings")
+      tails.map(r => StoreRead.parquet(spark, s"$r/geoparts"))
+        .reduce(_.unionByName(_))
+        .groupBy("cell", "pos")
+        .agg(sum(col("s")).cast("decimal(37,10)").as("s"),
+          sum(col("cnt")).as("cnt"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$staging/geoparts")
+    }
     (roots.head, path)
   }
 
@@ -677,13 +591,12 @@ object AnnIndex {
   /** The rotation record's store root (epoch 1 at resized k). */
   def retrainEpochRoot(dir: String, k: Int, iters: Int = 2, m: Int = 4,
                        codes: Int = 8): String =
-    sys.props("java.io.tmpdir") +
-      s"/graft-annidxepoch-$HV-${slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}-c$k-i$iters-m$m-k$codes-e1"
+    StoreCommit.root("annidxepoch", HV, dir,
+      params(k, iters, m, codes) + "-e1")
 
   /** EXECUTE a measured retrain decision: if `retrain`, build/publish
     * the resized full-corpus snapshot store (idempotent — the standard
-    * [[ensureFull]] path) and commit the epoch-1 rotation record
+    * "full" [[path]]) and commit the epoch-1 rotation record
     * atomically; if not, the standing epoch keeps serving. Returns the
     * epoch that serves after the call (1 = rotated, 0 = kept). The
     * decision itself stays [[graft.ops.Curate.retrainDecision]]'s
@@ -694,16 +607,15 @@ object AnnIndex {
                       m: Int = 4, codes: Int = 8): Int =
     if (!retrain) 0
     else {
-      val store = ensureFull(spark, dir, kResized, iters, m, codes)
-      val root = retrainEpochRoot(dir, kResized, iters, m, codes)
-      StoreCommit.singleFlight(appendMemo, root)(
-        StoreCommit.ensure(root) { staging =>
-          import spark.implicits._
-          Seq((1L, kResized, "full", store))
-            .toDF("epoch", "k", "tag", "store_root")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$staging/record")
-        })
+      val store = path(spark, dir, "full", kResized, iters, m, codes)
+      StoreCommit.publish(retrainEpochRoot(dir, kResized, iters, m,
+          codes)) { staging =>
+        import spark.implicits._
+        Seq((1L, kResized, "full", store))
+          .toDF("epoch", "k", "tag", "store_root")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$staging/record")
+      }
       1
     }
 
@@ -717,17 +629,14 @@ object AnnIndex {
   private def ensureEpochGeoparts(spark: SparkSession, dir: String,
                                   k: Int, iters: Int, m: Int,
                                   nCodes: Int): String =
-    StoreCommit.singleFlight(appendMemo,
-      retrainEpochRoot(dir, k, iters, m, nCodes) + "-geo")(
-      StoreCommit.ensure(
-        retrainEpochRoot(dir, k, iters, m, nCodes) + "-geo") {
-        staging =>
-          Sim.cellCentroidPartials(
-              cells(spark, dir, "full", k, iters, m, nCodes), "cell",
-              "embedding")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$staging/geoparts")
-      })
+    StoreCommit.publish(
+        retrainEpochRoot(dir, k, iters, m, nCodes) + "-geo") { staging =>
+      Sim.cellCentroidPartials(
+          cells(spark, dir, "full", k, iters, m, nCodes), "cell",
+          "embedding")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$staging/geoparts")
+    }
 
   /** TAKEDOWN on a ROTATED epoch (q331 — the lifecycle ops COMPOSE):
     * after [[rotateIfRetrain]] publishes the resized epoch-1 store,
@@ -749,22 +658,19 @@ object AnnIndex {
                          iters: Int = 2, m: Int = 4,
                          nCodes: Int = 8): (DataFrame, DataFrame) = {
     val geo = ensureEpochGeoparts(spark, dir, k, iters, m, nCodes)
-    val root = sys.props("java.io.tmpdir") +
-      s"/graft-annepochdel-$HV-${slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}-c$k-i$iters-m$m-k$nCodes-v2"
-    val path = StoreCommit.singleFlight(appendMemo, root)(
-      StoreCommit.ensure(root) { staging =>
-        val doomed = cells(spark, dir, "full", k, iters, m, nCodes)
-          .where(deleteSplit)
-        doomed.select(col("vec_id"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$staging/dels")
-        Sim.cellCentroidPartials(doomed, "cell", "embedding")
-          .select(col("cell"), col("pos"), (-col("s")).as("s"),
-            (-col("cnt")).as("cnt"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$staging/negparts")
-      })
+    val path = StoreCommit.publish(StoreCommit.root("annepochdel", HV,
+        dir, params(k, iters, m, nCodes) + "-v2")) { staging =>
+      val doomed = cells(spark, dir, "full", k, iters, m, nCodes)
+        .where(deleteSplit)
+      doomed.select(col("vec_id"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$staging/dels")
+      Sim.cellCentroidPartials(doomed, "cell", "embedding")
+        .select(col("cell"), col("pos"), (-col("s")).as("s"),
+          (-col("cnt")).as("cnt"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$staging/negparts")
+    }
     val dels = broadcast(StoreRead.parquet(spark, s"$path/dels"))
     (codes(spark, dir, "full", k, iters, m, nCodes)
       .join(dels, Seq("vec_id"), "left_anti"),

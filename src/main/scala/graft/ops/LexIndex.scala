@@ -34,61 +34,21 @@ object LexIndex {
     * the query side compute `pmod(hash(term), TermBuckets)`. */
   val TermBuckets = 64
 
-  /** Store root: path slug + content fingerprint of the fixture, so a
-    * regenerated fixture at the same path rebuilds the index instead
-    * of serving stale postings (r13 advice — same key policy as
-    * [[AnnIndex.root]]). */
-  def root(dir: String): String =
-    sys.props("java.io.tmpdir") +
-      s"/graft-lexindex-$V-${StoreCommit.slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}"
+  /** Store root ([[StoreCommit.root]]): path slug + content
+    * fingerprint of the fixture, so a regenerated fixture at the same
+    * path rebuilds the index instead of serving stale postings (r13
+    * advice — same key policy as [[AnnIndex.root]]). */
+  def root(dir: String): String = StoreCommit.root("lexindex", V, dir)
 
-  private val ensureMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]
-
-  private def ensure(spark: SparkSession, dir: String): String =
-    StoreCommit.singleFlight(ensureMemo, root(dir))(
-      StoreCommit.ensure(root(dir)) { staging =>
-        val docs = graft.Tables.load(spark, dir, "documents")
-        val terms = docs.select(col("doc_id").as("id"),
-          explode(Text.cleanTokens(col("text"))).as("term"))
-        val tf = terms.groupBy("id", "term").agg(count(lit(1)).as("tf"))
-        // postings land in term-hash bucket DIRECTORIES: a query batch
-        // joining on (term, tbkt) lets dynamic partition pruning skip
-        // every bucket its terms don't hash to — the term-directory of
-        // an inverted index, expressed as partition pruning
-        tf.withColumn("tbkt", pmod(hash(col("term")), lit(TermBuckets)))
-          .repartition(col("tbkt"))
-          .write.mode("overwrite").partitionBy("tbkt")
-          .parquet(s"$staging/tf")
-        terms.groupBy("id").agg(count(lit(1)).as("dl"))
-          .write.mode("overwrite").parquet(s"$staging/dl")
-        tf.groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(s"$staging/df")
-        terms.agg(count(lit(1)).as("n_terms"))
-          .crossJoin(docs.agg(count(lit(1)).as("n_docs")))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$staging/stats")
-      })
-
-  /** The four stored index frames (tf, dl, df, stats) — plain parquet
-    * reads, nothing pinned in executor memory. */
-  def frames(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val p = ensure(spark, dir)
-    (StoreRead.parquet(spark, s"$p/tf"), StoreRead.parquet(spark, s"$p/dl"),
-      StoreRead.parquet(spark, s"$p/df"), StoreRead.parquet(spark, s"$p/stats"))
-  }
-
-  /** BM25 retrieval served from the store — the production serving
-    * path: query batch in, ranked postings out, zero corpus
+  /** The four stored index frames (tf, dl, df, stats) of the whole
+    * corpus, published once per corpus snapshot — plain parquet
+    * reads, nothing pinned in executor memory. BM25 over them
+    * ([[Text.bm25RetrieveStored]]) is the serving path: zero corpus
     * tokenization at query time. */
-  def bm25Retrieve(spark: SparkSession, dir: String,
-                   queries: DataFrame, k: Int,
-                   excludeSelf: Boolean = false): DataFrame = {
-    val (tf, dl, df, stats) = frames(spark, dir)
-    Text.bm25RetrieveStored(queries, tf, dl, df, stats, k, excludeSelf)
-  }
+  def frames(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+    readFrames(spark, StoreCommit.publish(root(dir))(writeFrames(_,
+      buildFrames(graft.Tables.load(spark, dir, "documents")))))
 
   /** Build the four index frames from a document frame WITHOUT
     * persisting — the shard-local build step of incremental index
@@ -190,69 +150,24 @@ object LexIndex {
     * r17 "v4": prefix-keyed roots + delete segments in the chain. */
   private val HV = "v4"
 
-  /** The standing/delta corpus split for the maintained index —
-    * doc_id % 5, mirroring [[Sim.frozenDeltaSplit]]'s vec_id policy so
-    * the fully-maintained hybrid (q300) splits both arms on one rule.
-    */
-  val deltaSplit: Column = col("doc_id") % 5 === 0
+  /** The standing/delta corpus split over doc_id
+    * ([[Chains.deltaSplit]]). */
+  val deltaSplit: Column = Chains.deltaSplit("doc_id")
 
-  /** The named chains of the maintained index, as segment lists
-    * ([[graft.ops.Chains]] — ids key the prefix-shared roots):
-    *   - ""   — the 2-append fixture (standing, then the delta);
-    *   - "c3" — the delta split into TWO ingest batches (mid-chain
-    *     as-of reads, r15 ask #6);
-    *   - "md" — the default chain plus a head TOMBSTONE segment (the
-    *     r16 delete lifecycle, now a chain suffix sharing the whole
-    *     default history's bytes);
-    *   - "m3" — append → delete → append: the takedown hits the
-    *     STANDING corpus, then a batch arrives on the masked index —
-    *     the mixed chain whose every version is an as-of-readable,
-    *     oracle-gated state (r17; note a v2 doc matching the delete
-    *     predicate stays live — capture-time semantics).
-    * Appends are pairwise disjoint by construction of the splits. */
-  private def chainSegs(chain: String): Seq[Segment] = chain match {
-    case "" => Seq(Append("std", !deltaSplit), Append("d", deltaSplit))
-    case "c3" => Seq(Append("std", !deltaSplit),
-      Append("d0", col("doc_id") % 10 === 0),
-      Append("d5", col("doc_id") % 10 === 5))
-    case "c4" => Seq(Append("std", !deltaSplit),
-      Append("d0", col("doc_id") % 10 === 0),
-      Append("d5a", col("doc_id") % 20 === 5),
-      Append("d5b", col("doc_id") % 20 === 15))
-    case "md" => Seq(Append("std", !deltaSplit),
-      Append("d", deltaSplit), Delete("del7", deleteSplit))
-    case "m3" => Seq(Append("std", !deltaSplit),
-      Delete("del7", deleteSplit), Append("d", deltaSplit))
-    case other => throw new IllegalArgumentException(
-      s"unknown chain '$other' (expected \"\"|c3|c4|md|m3)")
-  }
+  /** The named chains of the maintained index: the shared
+    * [[Chains.catalogue]] over doc_id. */
+  private def chainSegs(chain: String): Seq[Segment] =
+    Chains.catalogue(chain, "doc_id")
 
-  /** Measured chain statistics — the inputs of the compaction-policy
-    * decision (q324), as ONE LAZY frame (chain, n_segments, n_live,
-    * n_tomb) over `chains`, ALL store reads: segment count from the
-    * published roots, live docs from the head's pre-folded statscum
-    * (one 1-row scan per chain), tombstones from the delete segments'
-    * published id files (∝ batch). Nothing tokenizes or scans the
-    * corpus, and nothing collects — N chains cost one Spark action
-    * over tiny files ([[AnnIndex.chainStatsFrame]]'s discipline). */
+  /** Measured chain statistics ([[Chains.statsFrame]]): live docs from
+    * the head's pre-folded statscum (one 1-row scan per chain) —
+    * nothing tokenizes or scans the corpus. */
   def chainStatsFrame(spark: SparkSession, dir: String,
                       chains: Seq[String]): DataFrame =
-    chains.map { ch =>
-      val roots = ensureAppendHistory(spark, dir, ch)
-      val live = StoreRead.parquet(spark, s"${roots.last}/statscum")
-        .select(col("n_docs").as("n_live"))
-      val delRoots = chainSegs(ch).zip(roots).collect {
-        case (Delete(_, _), r) => r }
-      val tomb =
-        if (delRoots.isEmpty) live.select(lit(0L).as("n_tomb"))
-        else delRoots.map(r => StoreRead.parquet(spark, s"$r/dels"))
-          .reduce(_.unionByName(_))
-          .agg(count(lit(1)).as("n_tomb"))
-      live.crossJoin(tomb).select(
-        lit(if (ch.isEmpty) "default" else ch).as("chain"),
-        lit(roots.length).as("n_segments"),
-        col("n_live"), col("n_tomb"))
-    }.reduce(_.unionByName(_))
+    Chains.statsFrame(spark, chains, "doc_id",
+      ensureAppendHistory(spark, dir, _))(roots =>
+      StoreRead.parquet(spark, s"${roots.last}/statscum")
+        .select(col("n_docs").as("n_live")))
 
   /** The live-corpus predicate as of `version` of `chain` — what an
     * as-of read serves (exposed for specs and decision queries). */
@@ -262,24 +177,28 @@ object LexIndex {
   /** One segment's store root inside a chain history: keyed by the
     * dot-joined segment-id PREFIX up to it, NOT by (chain, version) —
     * chains sharing a prefix share the published segment (r16 advice:
-    * "c3" rebuilt and re-stored the standing segment the default
+    * the c3 chain rebuilt and re-stored the standing segment the default
     * chain already published). Prefix keying is also the correct key
     * for the cumulative `dfcum`/`statscum` pre-folds, which depend on
     * everything before the segment, not just its own slice. */
   def versionRoot(dir: String, version: Long,
                   chain: String = ""): String =
-    sys.props("java.io.tmpdir") +
-      s"/graft-lexidxhist-$HV-${StoreCommit.slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}" +
-      s"-p${Chains.prefix(chainSegs(chain), version.toInt)}"
+    chainRoot("lexidxhist", dir, chain, version)
 
-  private val histMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]
+  /** A `kind` store over segments 0..`version` of `chain`, keyed by
+    * their segment-id prefix (history, compacted and tiered roots). */
+  private def chainRoot(kind: String, dir: String, chain: String,
+                        version: Long): String =
+    StoreCommit.root(kind, HV, dir,
+      s"-p${Chains.prefix(chainSegs(chain), version.toInt)}")
 
-  /** Persist one segment's four frames under `staging` — the same
-    * layout as the snapshot store ([[ensure]]), including the
-    * term-bucket directory partitioning on tf, so every consumer gets
-    * the pruned postings scan regardless of which store it reads. */
+  /** Persist one store's four frames under `staging` — the snapshot
+    * store ([[frames]]) and every segment alike. tf lands in term-hash
+    * bucket DIRECTORIES: a query batch joining on (term, tbkt) lets
+    * partition pruning skip every bucket its terms don't hash to —
+    * the term-directory of an inverted index, expressed as partition
+    * pruning — so every consumer gets the pruned postings scan
+    * regardless of which store it reads. */
   private def writeFrames(staging: String,
                           frames: (DataFrame, DataFrame, DataFrame,
                             DataFrame)): Unit = {
@@ -300,7 +219,7 @@ object LexIndex {
       StoreRead.parquet(spark, s"$p/df"), StoreRead.parquet(spark, s"$p/stats"))
 
   /** Ensure the segment history for fixture `dir` and `chain`
-    * ([[chainSegs]]): an APPEND segment indexes its batch ALONE (cost
+    * ([[Chains.catalogue]]): an APPEND segment indexes its batch ALONE (cost
     * ∝ batch — no standing segment's postings are read, let alone
     * rewritten); a DELETE segment publishes its captured tombstone
     * ids plus the cum-AFTER pre-folds (cost ∝ batch: only the doomed
@@ -318,9 +237,8 @@ object LexIndex {
                           chain: String = ""): Seq[String] =
     Chains.effective(chainSegs(chain)).zipWithIndex
       .foldLeft(Seq.empty[String]) { case (prev, ((seg, eff), v)) =>
-        val root = versionRoot(dir, v.toLong, chain)
-        prev :+ StoreCommit.singleFlight(histMemo, root)(
-          StoreCommit.ensure(root) { staging =>
+        prev :+ StoreCommit.publish(versionRoot(dir, v.toLong, chain)) {
+          staging =>
             seg match {
               case Append(_, _) =>
                 val fr = buildFrames(
@@ -381,7 +299,7 @@ object LexIndex {
                   .coalesce(1).write.mode("overwrite")
                   .parquet(s"$staging/statscum")
             }
-          })
+        }
       }
 
   /** TIME-TRAVEL read of the maintained index: the four frames AS OF
@@ -401,11 +319,8 @@ object LexIndex {
   def framesAsOf(spark: SparkSession, dir: String, version: Long,
                  chain: String = "")
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val roots = ensureAppendHistory(spark, dir, chain)
-    require(version >= 0L && version < roots.length,
-      s"chain '$chain' holds segments 0..${roots.length - 1}" +
-        s" (0 = standing, ${roots.length - 1} = head), got $version")
-    val segRoots = chainSegs(chain).zip(roots).take(version.toInt + 1)
+    val segRoots = Chains.asOf(chainSegs(chain),
+      ensureAppendHistory(spark, dir, chain), chain, version)
     val apps = segRoots.collect { case (Append(_, _), r) => r }
     val dels = segRoots.collect { case (Delete(_, _), r) => r }
     val tf0 = apps.map(r => StoreRead.parquet(spark, s"$r/tf"))
@@ -431,7 +346,7 @@ object LexIndex {
   // Appends were write-∝-batch; a REAL index maintainer also takes
   // DELETES (takedown / right-to-be-forgotten passes — a first-class
   // operation in any 100 TB corpus pipeline). A delete is a SEGMENT
-  // TYPE in the chain algebra ([[chainSegs]]): the "md" chain is the
+  // TYPE in the chain algebra ([[Chains.catalogue]]): the "md" chain is the
   // default history plus one head tombstone segment — and under
   // prefix-keyed roots it SHARES the default chain's two published
   // segments byte-for-byte, so "ensure the delete" writes exactly one
@@ -443,18 +358,8 @@ object LexIndex {
   // survivors must equal serving through the mask (one contract, two
   // layouts).
 
-  /** The takedown split for the maintained index — doc_id % 7 === 3
-    * cuts across BOTH the standing and delta slices, so a delete
-    * exercises every segment of the history it masks. */
-  val deleteSplit: Column = col("doc_id") % 7 === 3
-
-  /** Publish the head tombstone segment — [[ensureAppendHistory]] of
-    * the "md" chain; the two append segments are the default chain's
-    * published bytes (prefix-shared), so only the tombstone segment
-    * is new. Returns its root. */
-  def ensureDeleteTombstones(spark: SparkSession, dir: String)
-      : String =
-    ensureAppendHistory(spark, dir, chain = "md").last
+  /** The takedown split over doc_id ([[Chains.deleteSplit]]). */
+  val deleteSplit: Column = Chains.deleteSplit("doc_id")
 
   /** The four frames AFTER the tombstone delete — the serving read:
     * the "md" chain's head state ([[framesAsOf]] masks tf/dl with the
@@ -482,21 +387,14 @@ object LexIndex {
     * answers. */
   def compactedHeadFrames(spark: SparkSession, dir: String,
                           chain: String = "")
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val segs = chainSegs(chain)
-    val root = sys.props("java.io.tmpdir") +
-      s"/graft-lexidxcompact-$HV-${StoreCommit.slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}" +
-      s"-p${Chains.prefix(segs, segs.length - 1)}"
-    val p = StoreCommit.singleFlight(histMemo, root)(
-      StoreCommit.ensure(root) { staging =>
-        val (tf, dl, df, stats) =
-          framesAsOf(spark, dir, headVersion(chain), chain)
-        writeFrames(staging,
-          (tf.drop("tbkt"), dl.coalesce(1), df.coalesce(1), stats))
-      })
-    readFrames(spark, p)
-  }
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+    readFrames(spark, StoreCommit.publish(chainRoot("lexidxcompact", dir,
+        chain, headVersion(chain))) { staging =>
+      val (tf, dl, df, stats) =
+        framesAsOf(spark, dir, headVersion(chain), chain)
+      writeFrames(staging,
+        (tf.drop("tbkt"), dl.coalesce(1), df.coalesce(1), stats))
+    })
 
   /** TIERED (minor) compaction of an all-append chain's head — the
     * segment-count arm of q324's policy EXECUTED the way a 100 TB
@@ -529,31 +427,27 @@ object LexIndex {
         s"'$chain' holds delete segments — use compactedHeadFrames " +
         "(the reclaim)")
     val roots = ensureAppendHistory(spark, dir, chain)
-    val root = sys.props("java.io.tmpdir") +
-      s"/graft-lexidxtier-$HV-${StoreCommit.slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}" +
-      s"-p${Chains.prefix(segs, segs.length - 1)}"
-    val p = StoreCommit.singleFlight(histMemo, root)(
-      StoreCommit.ensure(root) { staging =>
-        val tails = roots.drop(1)
-        val tf = tails.map(r => StoreRead.parquet(spark, s"$r/tf"))
-          .reduce(_.unionByName(_))
-        val dl = tails.map(r => StoreRead.parquet(spark, s"$r/dl"))
-          .reduce(_.unionByName(_))
-        val df = tails.map(r => StoreRead.parquet(spark, s"$r/df"))
-          .reduce(_.unionByName(_))
-          .groupBy("term").agg(sum(col("df")).as("df"))
-        val stats = tails.map(r => StoreRead.parquet(spark, s"$r/stats"))
-          .reduce(_.unionByName(_))
-          .agg(sum(col("n_terms")).as("n_terms"),
-            sum(col("n_docs")).as("n_docs"))
-        writeFrames(staging,
-          (tf.drop("tbkt"), dl.coalesce(1), df.coalesce(1), stats))
-        Seq("dfcum", "statscum").foreach(f =>
-          StoreRead.parquet(spark, s"${roots.last}/$f")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$staging/$f"))
-      })
+    val p = StoreCommit.publish(chainRoot("lexidxtier", dir, chain,
+        headVersion(chain))) { staging =>
+      val tails = roots.drop(1)
+      val tf = tails.map(r => StoreRead.parquet(spark, s"$r/tf"))
+        .reduce(_.unionByName(_))
+      val dl = tails.map(r => StoreRead.parquet(spark, s"$r/dl"))
+        .reduce(_.unionByName(_))
+      val df = tails.map(r => StoreRead.parquet(spark, s"$r/df"))
+        .reduce(_.unionByName(_))
+        .groupBy("term").agg(sum(col("df")).as("df"))
+      val stats = tails.map(r => StoreRead.parquet(spark, s"$r/stats"))
+        .reduce(_.unionByName(_))
+        .agg(sum(col("n_terms")).as("n_terms"),
+          sum(col("n_docs")).as("n_docs"))
+      writeFrames(staging,
+        (tf.drop("tbkt"), dl.coalesce(1), df.coalesce(1), stats))
+      Seq("dfcum", "statscum").foreach(f =>
+        StoreRead.parquet(spark, s"${roots.last}/$f")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$staging/$f"))
+    }
     val (mtf, mdl, _, _) = readFrames(spark, p)
     (StoreRead.parquet(spark, s"${roots.head}/tf").unionByName(mtf),
       StoreRead.parquet(spark, s"${roots.head}/dl").unionByName(mdl),
@@ -561,7 +455,7 @@ object LexIndex {
       StoreRead.parquet(spark, s"$p/statscum"))
   }
 
-  /** One STREAMED micro-segment's write (the q309 gate): the same
+  /** One STREAMED micro-segment's write (the q332 gate): the same
     * four frames, with tf carrying tbkt as a PLAIN column rather than
     * a partition directory — a micro-batch segment is too small to
     * bucket physically, and production compaction

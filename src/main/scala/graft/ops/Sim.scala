@@ -1208,8 +1208,6 @@ object Sim {
   /** Argmax cosine via lexicographic struct max; centroid norms are
     * driver-side constants, the row's own norm cancels in the argmax.
     * Cell id enters negated so ties resolve to the LOWEST cell.
-    * `private[graft]` so the streaming append sink (q282) assigns
-    * micro-batches with the identical expression.
     */
   private[graft] def assignScored(vecCol: String,
                                   c: Seq[Seq[Float]]): Column =
@@ -1226,7 +1224,7 @@ object Sim {
     * struct max never consults the third field because negCell is
     * already distinct per element — so cell assignments stay
     * bit-identical to [[assignScored]]; only the REPORTED similarity
-    * gains the row-norm division. Without it (r12 advice) the q280/q282
+    * gains the row-norm division. Without it (r12 advice) the q280
     * drift monitor read floor(dot/|c|·10⁹), which confounds angular
     * drift with vector-NORM differences whenever embeddings are not
     * unit-norm — a new encoder emitting longer vectors would look like
@@ -1246,15 +1244,15 @@ object Sim {
     }: _*))
   }
 
-  /** The q280/q282 base/delta split and the memo-key policy frozen to
-    * it — ONE definition (r12 advice) so the batch append ([[ivfFrozenAppend]]
-    * via Reg6), the streaming gate (StreamOps.ivfAppendGate), and the
-    * delta staging writer can never drift: changing the split here
-    * changes every consumer AND the centroid memo key together, so a
-    * predicate edit can't silently reuse centroids trained on a
-    * different base set.
+  /** The q280 base/delta split ([[Chains.deltaSplit]] over vec_id)
+    * and the memo-key policy frozen to it — ONE definition (r12
+    * advice) so the batch append ([[ivfFrozenAppend]] via Reg6), the
+    * ANN chain catalogue, and the delta staging writer can never
+    * drift: changing the split changes every consumer AND the
+    * centroid memo key together, so a predicate edit can't silently
+    * reuse centroids trained on a different base set.
     */
-  val frozenDeltaSplit: Column = col("vec_id") % 5 === 0
+  val frozenDeltaSplit: Column = Chains.deltaSplit("vec_id")
 
   /** The [[kmeansCentroidsCached]] key for centroids trained on the
     * [[frozenDeltaSplit]] base slice of fixture `dir` — the suffix
@@ -1305,7 +1303,7 @@ object Sim {
         // the frozenBaseKey memo names the SHARED frozenDeltaSplit —
         // centroids cached under it for any other split would poison
         // every consumer of the frozen base (AnnIndex "base", the
-        // q282 stream gate). Loud failure beats silent reuse (r13
+        // q333 stream gate). Loud failure beats silent reuse (r13
         // advice).
         require(isDelta.toString == frozenDeltaSplit.toString,
           "cacheKey caches centroids under Sim.frozenBaseKey, which " +
@@ -1323,7 +1321,7 @@ object Sim {
 
   /** [[ivfFrozenAppend]] under EXTERNALLY-supplied frozen centroids —
     * the physical-index form: the quantizer arrives from the store
-    * ([[graft.ops.AnnIndex]] in the registered q280/q282), not from a
+    * ([[graft.ops.AnnIndex]] in the registered q280), not from a
     * trainer call, so "frozen" survives a process restart. Assignment
     * and summary expressions are the exact ones the trainer form uses
     * — one operator, two quantizer provenances.
@@ -1339,8 +1337,8 @@ object Sim {
   }
 
   /** The per-cell summary over an assigned (is_delta, cell, sim_e9)
-    * frame — shared by [[ivfFrozenAppend]] and the streaming append
-    * gate (q282), so both surfaces aggregate identically.
+    * frame — shared by [[ivfFrozenAppend]] and the stored-merge
+    * append (q293), so both surfaces aggregate identically.
     */
   private[graft] def ivfSummarize(assigned: DataFrame, k: Int)
       : DataFrame = {
@@ -1994,8 +1992,8 @@ object Sim {
     * at query time, so the registered hybrids are stored-lexical ⊕
     * stored-ANN end to end; without it the arm tokenizes on the fly
     * (ad-hoc frames, tests). Bit-identical either way (the stored
-    * frames are the deterministic count aggregates — the q176/q291
-    * oracle pair proves it). */
+    * frames are the deterministic count aggregates — Round13OpsSpec
+    * proves it against the on-the-fly retriever). */
   private def hybridLexArm(docs: DataFrame, nQueries: Int, listK: Int,
                            docId: String, textCol: String,
                            lexStore: Option[(DataFrame, DataFrame,

@@ -6,10 +6,10 @@ import scala.jdk.CollectionConverters._
   * ([[AnnIndex]], [[LexIndex]]): build into a pid-suffixed staging
   * directory, stamp `_DONE`, `Files.move(ATOMIC_MOVE)` to the stable
   * target; the loser of a concurrent cross-JVM race deletes its
-  * staging and reads the winner's store. Within one JVM, callers wrap
-  * [[ensure]] in a computeIfAbsent (single-flight) — two threads
-  * building into the SAME pid-keyed staging dir would corrupt each
-  * other mid-write.
+  * staging and reads the winner's store. Within one JVM,
+  * [[publish]] single-flights each target — two threads building
+  * into the SAME pid-keyed staging dir would corrupt each other
+  * mid-write. [[root]] names every store's durable path.
   */
 private[graft] object StoreCommit {
 
@@ -49,10 +49,32 @@ private[graft] object StoreCommit {
       }
   }
 
+  /** The durable root of a store of `kind` at format `version`, built
+    * from fixture `dir`: under `java.io.tmpdir`, named by the
+    * fixture's path [[slug]] AND content [[fingerprint]], then `key`
+    * (the store's own parameters, `-`-prefixed). The path IS the
+    * cache key — a store published under it is served as is, so
+    * every input the bytes depend on must be named here. */
+  def root(kind: String, version: String, dir: String,
+           key: String = ""): String =
+    sys.props("java.io.tmpdir") +
+      s"/graft-$kind-$version-${slug(dir)}-f${fingerprint(dir)}$key"
+
+  private val publishMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.CompletableFuture[String]]
+
+  /** Returns `target`, publishing it first if no `_DONE` stamp
+    * exists: [[ensure]] single-flighted per target within the JVM —
+    * Verify runs queries concurrently, and two threads building into
+    * the same pid-keyed staging dir corrupt each other mid-write
+    * (cross-JVM races are handled by the ATOMIC_MOVE publish). */
+  def publish(target: String)(build: String => Unit): String =
+    singleFlight(publishMemo, target)(ensure(target)(build))
+
   /** Returns `target`, building it first if no `_DONE` stamp exists.
     * `build` receives the staging path and must write every file of
     * the store under it. */
-  def ensure(target: String)(build: String => Unit): String = {
+  private def ensure(target: String)(build: String => Unit): String = {
     if (new java.io.File(target, "_DONE").exists()) return target
     val staging = target + s"-stage-${ProcessHandle.current().pid}"
     build(staging)

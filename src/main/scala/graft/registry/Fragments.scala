@@ -185,7 +185,7 @@ private[graft] object Fragments {
       * over BOTH norms — the argmax rank stays on the norm-cancelling
       * dot/|c|, mirroring the engine's assignScoredCos) — ends in
       * `af(vec_id, cell, sim_e9)`. `kSql` is the seed count — a
-      * literal for the fixed parity grid (q280/q282/q293), or a
+      * literal for the fixed parity grid (q280/q293), or a
       * derived scalar (ceil-sqrt-count) for the sized serving oracles
       * (q299/q300); the final trained centroids stay named `c2`
       * so a probe budget can be derived from `(SELECT COUNT(*) FROM

@@ -222,27 +222,6 @@ private[graft] object Reg5Artifacts {
         .orderBy("query_id", "rk")),
 
 
-    // artifacts — BM25 served from the PHYSICAL inverted index
-    // (LexIndex scaladoc): q176's exact queries ranked from the stored
-    // (tf, dl, df, stats) frames — the corpus text is never tokenized
-    // at query time; one training-pass publishes the store, every
-    // query batch (and restart) reads bytes. Bound to q176's oracle
-    // string: one contract, on-the-fly and stored engines.
-    "q291_bm25_stored" -> ((s, dir) => {
-      import s.implicits._
-      graft.ops.LexIndex.bm25Retrieve(s, dir,
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
-
-
     // artifacts — the maintained inverted index SERVES FROM STORAGE
     // (r15, the LexIndex segment lifecycle — the AnnIndex q299 shape
     // for text): segment 0 = the standing slice's four frames,
@@ -267,22 +246,10 @@ private[graft] object Reg5Artifacts {
     }),
 
 
-    // artifacts — STREAMING segment appends (the q282 frozen-append
-    // story for text; StreamOps.lexAppendGate scaladoc): the delta
-    // slice replayed as 3 real micro-batches, each indexed alone and
-    // published as its own segment (write ∝ batch), then q176's
-    // queries served from the standing-∪-streamed fold — bound to
-    // q176's oracle string with q291/q305, and the text index's ingest
-    // path is gated under a REAL multi-micro-batch
-    // streaming replay like the ANN side's q282.
-    "q309_stream_lex_append" -> ((s, dir) =>
-      graft.streaming.StreamOps.docsGateResult(s, dir,
-          "q309_stream_lex_append")
-        .orderBy("query_id", "rk")),
-
-
     // artifacts — STREAMING auto-compaction (r17;
-    // StreamOps.lexAutoCompactGate scaladoc): the q309 ingest with
+    // StreamOps.lexAutoCompactGate scaladoc): the delta slice
+    // replayed as 3 real micro-batches, each indexed alone and
+    // published as its own segment (write ∝ batch), with
     // the q324 segment-count rule evaluated INSIDE every micro-batch
     // commit — crossing the 4-segment threshold makes the same commit
     // fold the streamed tail into one merged segment and retire the
@@ -306,8 +273,8 @@ private[graft] object Reg5Artifacts {
     // the count negatives folded off the pre-folded cums — bound to
     // the surviving-corpus BM25 string, whose batch twin is q326's md
     // arm, so batch and streaming takedown are provably ONE
-    // maintenance operator (the q280≡q282 / q305≡q309 discipline, now
-    // for deletes).
+    // maintenance operator (the q305≡q332 discipline, now for
+    // deletes).
     "q320_stream_takedown" -> ((s, dir) =>
       graft.streaming.StreamOps.docsGateResult(s, dir,
           "q320_stream_takedown")
@@ -873,15 +840,9 @@ private[graft] object Reg5Artifacts {
       // scores sum the 4dp-floored weights through DECIMAL(18,4) (the
       // q160 floored-score-sum contract) so ranking is order-free
       "q176_bm25_retrieval" -> bm25RetrievalOracleSql,
-      // ONE oracle, two engines: the stored-index serving form
-      // (LexIndex postings, zero corpus tokenization at query
-      // time) must rank bit-identically to the on-the-fly form
-      "q291_bm25_stored" -> bm25RetrievalOracleSql,
-      // the stored-segment serve, the compacted snapshot, and the
-      // streaming-append fold bind the SAME retrieval contract — six
-      // engines, one string
+      // ONE oracle, two engines: the stored-segment serve must rank
+      // bit-identically to the on-the-fly form
       "q305_bm25_index_serve" -> bm25RetrievalOracleSql,
-      "q309_stream_lex_append" -> bm25RetrievalOracleSql,
 
       // the streaming auto-compaction contract: rows are the q176
       // full-corpus serve; the layout label replays the in-commit
@@ -1774,7 +1735,7 @@ private[graft] object Reg5Artifacts {
   // the q93 BM25 replay joined to a literal query list; per-doc
   // scores sum the 4dp-floored weights through DECIMAL(18,4) (the
   // q160 floored-score-sum contract) so ranking is order-free.
-  // ONE string for the on-the-fly (q176) and stored-index (q291)
+  // ONE string for the on-the-fly (q176) and stored-segment (q305)
   // engines.
   /** The BM25 chain parameterized by a document predicate — "TRUE"
     * is the full-corpus contract (q176 and its engine twins);

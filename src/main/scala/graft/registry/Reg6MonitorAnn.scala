@@ -957,18 +957,6 @@ private[graft] object Reg6MonitorAnn {
         .orderBy("cell")),
 
 
-    // streaming — the q280 maintenance path as a REAL ingest: the
-    // delta slice replayed as 3 micro-batches through a frozen-
-    // quantizer foreachBatch append sink (StreamOps.ivfAppendGate
-    // scaladoc); committed postings + the frozen base assignment
-    // summarize to the SAME oracle string as q280 — batch and
-    // streaming append are one operator.
-    "q282_stream_ivf_append" -> ((s, dir) =>
-      graft.streaming.StreamOps.docsGateResult(s, dir,
-          "q282_stream_ivf_append")
-        .orderBy("cell")),
-
-
     // ANN — STREAMING auto-compaction (r17; q332's dense twin,
     // StreamOps.ivfAutoCompactGate scaladoc): the streamed frozen-
     // quantizer ingest with the q324 segment-count rule inside every
@@ -1032,8 +1020,8 @@ private[graft] object Reg6MonitorAnn {
     // atomically-published version — v1 = v0's published bytes
     // (standing postings never move) ∪ the encoded delta; v0 stays
     // readable (time-travel). Summarizing the merged head binds
-    // q280's oracle string: one contract, THREE engines — in-memory
-    // monitor (q280), streaming gate (q282), stored merge (this).
+    // q280's oracle string: one contract, two engines — in-memory
+    // monitor (q280), stored merge (this).
     "q293_ann_index_append" -> ((s, dir) =>
       Sim.ivfSummarize(
         graft.ops.AnnIndex.postingsAsOf(s, dir, version = 1L)
@@ -2869,9 +2857,8 @@ private[graft] object Reg6MonitorAnn {
       // the kmeans chain trained on the base slice only, frozen
       // assignment with integer floored sims over everything, per-cell
       // integer sums on the 0..7 grid — ONE string for the batch (q280)
-      // and streaming-append (q282) engines
+      // and stored-merge (q293) engines
       "q280_ivf_frozen_append" -> ivfFrozenOracleSql,
-      "q282_stream_ivf_append" -> ivfFrozenOracleSql,
 
       // the streaming auto-compaction contract (q332's dense twin):
       // rows are q299's serving string; the layout label replays the

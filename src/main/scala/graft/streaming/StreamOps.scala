@@ -923,7 +923,7 @@ object StreamOps {
 
   /** Stage the DELTA slice of the documents fixture
     * (doc_id % 5 = 0 — [[graft.ops.LexIndex.deltaSplit]], the q305
-    * standing/delta rule) as `nFiles` parquet files — the q309
+    * standing/delta rule) as `nFiles` parquet files — the q332
     * streamed-ingest replay for the text index. Memoized like
     * [[stageDocs]].
     */
@@ -946,7 +946,7 @@ object StreamOps {
     * Memoized like [[stageDocs]]; plain repartition staging is fine
     * here because only the final accumulated state is gated (the
     * folded tombstone set and count negatives are partition-
-    * invariant — the q309 staging rule). */
+    * invariant — the q332 staging rule). */
   def stageDocsDeletes(spark: SparkSession, sfDir: String,
                        nFiles: Int): String =
     stageMemo.computeIfAbsent(s"$sfDir#$nFiles#docsdels", _ => {
@@ -1123,9 +1123,6 @@ object StreamOps {
   // family's. Accounting is recorded in SCALE.md (round-12): after this
   // change a gate query's bench median measures the committed-output
   // read; the one family execution is paid in the first invocation.
-  // `SPARK_GRAFT_STREAM_FRESH=1` bypasses the memo AND restricts the
-  // run to the named gate — the dev/ScaleProbe loop for timing one
-  // engine's machinery in isolation (StreamProbe does this).
 
   private case class Gate(name: String,
       start: () => org.apache.spark.sql.streaming.StreamingQuery,
@@ -1133,9 +1130,6 @@ object StreamOps {
 
   private val familyMemo = new java.util.concurrent.ConcurrentHashMap[
     String, Map[String, scala.util.Try[DataFrame]]]()
-
-  private def freshGates: Boolean =
-    sys.env.get("SPARK_GRAFT_STREAM_FRESH").contains("1")
 
   /** One gate result out of the combined EVENTS family run (memoized
     * per fixture dir per JVM; see the section comment above).
@@ -1154,32 +1148,27 @@ object StreamOps {
   private def familyResult(spark: SparkSession, sfDir: String,
       name: String, family: String,
       gates: (SparkSession, String) => Seq[Gate]): DataFrame = {
-    val m =
-      if (freshGates)
-        runGateFamily(spark, sfDir, gates, Some(name))
-      else familyMemo.computeIfAbsent(s"$sfDir#family#$family",
-        _ => runGateFamily(spark, sfDir, gates, None))
+    val m = familyMemo.computeIfAbsent(s"$sfDir#family#$family",
+      _ => runGateFamily(spark, sfDir, gates))
     m.getOrElse(name,
       sys.error(s"unknown $family-family gate: $name")).get
   }
 
-  /** Start every selected gate concurrently on ONE cloned session,
+  /** Start every gate concurrently on ONE cloned session,
     * drain them all, and collect each gate's result independently (a
     * gate that fails at start, drain, or read carries its own Failure;
     * the others still commit).
     */
   private def runGateFamily(spark: SparkSession, sfDir: String,
-      gates: (SparkSession, String) => Seq[Gate],
-      onlyName: Option[String]): Map[String, scala.util.Try[DataFrame]] = {
+      gates: (SparkSession, String) => Seq[Gate])
+      : Map[String, scala.util.Try[DataFrame]] = {
     import scala.util.Try
     val ns = spark.newSession()
     // 2 state stores / shuffle partitions: the round-10 probe's fit for
     // fixture-scale state (32 stores committing per micro-batch was
     // pure overhead); one conf for the whole family
     ns.conf.set("spark.sql.shuffle.partitions", "2")
-    val selected = gates(ns, sfDir)
-      .filter(g => onlyName.forall(_ == g.name))
-    val started = selected.map(g => g -> Try(g.start()))
+    val started = gates(ns, sfDir).map(g => g -> Try(g.start()))
     started.map { case (g, tq) =>
       g.name -> tq.map { q =>
         try q.processAllAvailable() finally q.stop()
@@ -1321,9 +1310,7 @@ object StreamOps {
           "text", "ts", 8, watermark = "36500 days")
           .select("sig_key"),
         OutputMode.Append()),
-      ivfAppendGate(ns, sfDir),
       ivfAutoCompactGate(ns, sfDir),
-      lexAppendGate(ns, sfDir),
       lexAutoCompactGate(ns, sfDir),
       lexDeleteGate(ns, sfDir),
       ccTakedownGate(ns, sfDir))
@@ -1446,7 +1433,7 @@ object StreamOps {
       () => ccLabelFrame(standingCCLabels(ns, store)))
   }
 
-  /** The q320 gate — the q309 streaming discipline applied to
+  /** The q320 gate — the q332 streaming discipline applied to
     * TOMBSTONE DELETES: the takedown slice (doc_id%7=3) replayed as 3
     * micro-batches, each publishing its OWN tombstone mini-segment
     * (the batch's ids + the batch's df/stats counts as the NEGATIVE
@@ -1457,8 +1444,8 @@ object StreamOps {
     * negatives (exact integer fold, the [[graft.ops.LexIndex]]
     * delete algebra) — bound to the surviving-corpus BM25 string
     * (q326's md arm serves the batch twin), so batch and streaming
-    * takedown are provably ONE maintenance operator, like q280≡q282
-    * and q305≡q309 before it.
+    * takedown are provably ONE maintenance operator, like q305≡q332
+    * before it.
     */
   private def lexDeleteGate(ns: SparkSession, sfDir: String): Gate = {
     val dels3 = stageDocsDeletes(ns, sfDir, 3)
@@ -1522,62 +1509,12 @@ object StreamOps {
       })
   }
 
-  /** The q309 gate — the q282 frozen-append story for the TEXT index:
-    * the q305 delta slice replayed as 3 micro-batches, each indexed
-    * ALONE ([[graft.ops.LexIndex.buildFrames]] over just the batch —
-    * write cost ∝ batch, no standing posting read or rewritten) and
-    * published as its own segment. The result closure folds the
-    * standing stored segment with every committed micro-segment
-    * ([[graft.ops.LexIndex.mergeAll]] — tf/dl pure unions, df/stats
-    * re-summed) and serves q176's queries from the fold — bound to
-    * q176's oracle string, so on-the-fly, stored, in-memory merge,
-    * stored-segment serve, compacted, and STREAMING-append are
-    * provably ONE retrieval contract (six engines).
-    */
-  private def lexAppendGate(ns: SparkSession, sfDir: String): Gate = {
-    val delta3 = stageDocsDelta(ns, sfDir, 3)
-    val segs = tmp("graft-lexsegs")
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    Gate("q309_stream_lex_append",
-      () => ns.readStream.schema(docSchema)
-        .option("maxFilesPerTrigger", "1").parquet(delta3)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tmp("graft-lexseg-ck"))
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.ops.LexIndex.writeStreamSegment(s"$segs/b$bid",
-            graft.ops.LexIndex.buildFrames(batch))
-        }
-        .start(),
-      () => {
-        import ns.implicits._
-        val standing = graft.ops.LexIndex.framesAsOf(ns, sfDir, 0L)
-        val segDirs = Option(new java.io.File(segs).listFiles())
-          .getOrElse(Array.empty)
-          .filter(_.isDirectory).map(_.toString).sorted.toSeq
-        val streamed = segDirs.map(d => (
-          ns.read.parquet(s"$d/tf"), ns.read.parquet(s"$d/dl"),
-          ns.read.parquet(s"$d/df"), ns.read.parquet(s"$d/stats")))
-        val (tf, dl, dfreq, st) =
-          graft.ops.LexIndex.mergeAll(standing +: streamed)
-        graft.ops.Text.bm25RetrieveStored(
-            Seq(("kw_cust", "customer order value"),
-              ("kw_join", "join merge hash"),
-              ("kw_scan", "spark scan filter"),
-              ("kw_win", "window batch sort"))
-              .toDF("query_id", "query_text"),
-            tf, dl, dfreq, st, k = 5)
-          .select(col("query_id"), col("id").as("doc_id"),
-            col("n_matched"), col("score"), col("rk"))
-      })
-  }
-
   /** The q332 gate — MAINTENANCE INSIDE THE COMMIT PROTOCOL for
     * compaction (the q325 discipline applied to q324's segment-COUNT
-    * arm): the q309 streamed ingest replayed, but every micro-batch
+    * arm): the q305 delta slice replayed as 3 micro-batches, each
+    * indexed ALONE ([[graft.ops.LexIndex.buildFrames]] over just the
+    * batch — write cost ∝ batch, no standing posting read or
+    * rewritten) and published as its own segment; every micro-batch
     * commit also evaluates the compaction rule over the store it just
     * grew — once the standing segment plus the committed
     * micro-segments reach the policy's 4-segment threshold, the SAME
@@ -1589,7 +1526,11 @@ object StreamOps {
     * left on disk and derives the layout label from the PHYSICAL
     * state (merged tail present, micro-segments gone), so an engine
     * that kept appending without compacting fails the oracle's pinned
-    * label, not just a spec. Rows bound to q176's full-corpus string.
+    * label, not just a spec. Rows bound to q176's full-corpus string:
+    * the standing stored segment folded with the streamed tail
+    * ([[graft.ops.LexIndex.mergeAll]] — tf/dl pure unions, df/stats
+    * re-summed) serves exactly what the batch-maintained head (q305)
+    * serves.
     */
   private def lexAutoCompactGate(ns: SparkSession,
                                  sfDir: String): Gate = {
@@ -1653,55 +1594,6 @@ object StreamOps {
             col("query_id"), col("id").as("doc_id"),
             col("n_matched"), col("score"), col("rk"))
       })
-  }
-
-  /** The q282 gate: the q280 delta slice replayed as 3 micro-batches
-    * through a FROZEN-quantizer foreachBatch append sink — each batch
-    * is assigned with the centroids trained ONCE on the base (the
-    * production ingest: postings accumulate, the quantizer never
-    * retrains mid-stream) and appended to a postings table. The result
-    * frame re-reads the committed postings, assigns the static base
-    * with the same frozen expression, and summarizes — bound to q280's
-    * oracle string, so batch and streaming append are provably ONE
-    * maintenance operator.
-    */
-  private def ivfAppendGate(ns: SparkSession, sfDir: String): Gate = {
-    val embDelta3 = stageEmbeddingsDelta(ns, sfDir, 3)
-    val postings = tmp("graft-ivf-postings") + "/p"
-    val embBase = graft.Tables.load(ns, sfDir, "embeddings")
-      .where(!graft.ops.Sim.frozenDeltaSplit)
-    // the frozen quantizer from the PHYSICAL store (AnnIndex "base"
-    // tag — the q280 batch twin reads the same bytes); every
-    // micro-batch and the read-back summary share this durable state
-    lazy val cents = graft.ops.AnnIndex.centroids(ns, sfDir, "base")
-    val embSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
-    def assignedCols(df: DataFrame, delta: Boolean): DataFrame = {
-      // cos_e9 (true cosine, row norm included) is the reported value;
-      // the argmax cell comes from the norm-cancelling prefix — the
-      // q280 batch twin's exact expression pair
-      val st = graft.ops.Sim.assignScoredCos("embedding", cents)
-      df.select(lit(delta).as("is_delta"),
-        (-st.getField("negCell")).as("cell"),
-        st.getField("cos_e9").as("sim_e9"))
-    }
-    Gate("q282_stream_ivf_append",
-      () => ns.readStream.schema(embSchema)
-        .option("maxFilesPerTrigger", "1").parquet(embDelta3)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tmp("graft-ivf-ck"))
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          assignedCols(batch, delta = true)
-            .write.mode("append").parquet(postings)
-        }
-        .start(),
-      () => graft.ops.Sim.ivfSummarize(
-        assignedCols(embBase, delta = false)
-          .unionByName(ns.read.parquet(postings)), 8))
   }
 
   /** Read a directory of events-schema parquet files as a (bounded) stream

@@ -156,7 +156,8 @@ class Round16OpsSpec extends SparkSpec {
       "holds exactly the deleted ids plus vocab-sized AFTER frames " +
       "(df/stats bit-equal to indexing the survivors from scratch), " +
       "and no served row on either arm carries a deleted id") {
-    val p = ops.LexIndex.ensureDeleteTombstones(spark, dir)
+    val p = ops.LexIndex.ensureAppendHistory(spark, dir, chain = "md")
+      .last
     val docs = Tables.load(spark, dir, "documents")
     val dels = spark.read.parquet(p + "/dels")
     val expect = docs.where(ops.LexIndex.deleteSplit)

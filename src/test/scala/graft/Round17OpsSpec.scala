@@ -75,6 +75,22 @@ class Round17OpsSpec extends SparkSpec {
       ops.LexIndex.versionRoot(dir, 1L, ""))
   }
 
+  test("an unknown chain name is rejected through both indexes with " +
+      "the one catalogue's message, before anything is built") {
+    val want = "unknown chain 'c9' (expected \"\"|c3|c4|md|m3)"
+    Seq[(String, () => Any)](
+      "AnnIndex.postingsAsOf" -> (() =>
+        ops.AnnIndex.postingsAsOf(spark, dir, 0L, chain = "c9")),
+      "AnnIndex.headVersion" -> (() => ops.AnnIndex.headVersion("c9")),
+      "LexIndex.framesAsOf" -> (() =>
+        ops.LexIndex.framesAsOf(spark, dir, 0L, chain = "c9")),
+      "LexIndex.liveAsOf" -> (() => ops.LexIndex.liveAsOf(0L, "c9"))
+    ).foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage === want, name)
+    }
+  }
+
   test("lex mixed chain m3 (append→delete→append): every version's " +
       "as-of frames equal a from-scratch build over that version's " +
       "LIVE corpus, and capture-time semantics keep a post-delete " +
